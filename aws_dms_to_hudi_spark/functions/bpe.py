@@ -42,6 +42,7 @@ from __future__ import annotations
 
 from typing import TYPE_CHECKING
 
+from .. import artifact_time
 from . import portable as P
 from .dedup import _posexplode, materialize
 
@@ -298,10 +299,6 @@ def bpe_encode(
     )
 
 
-_ENC_CACHE: dict = {}
-_ENC_LOCK = __import__("threading").Lock()
-
-
 def _encoded_symbols(spark, docs_view, merges, rounds=BPE_ROUNDS,
                      cache_key=None):
     """Full-corpus encoded symbol table — the shared artifact behind
@@ -313,23 +310,20 @@ def _encoded_symbols(spark, docs_view, merges, rounds=BPE_ROUNDS,
     another tokenizer's encoded symbols."""
     merges_fp = __import__("hashlib").md5(
         repr(list(merges)).encode()).hexdigest()
-    key = (id(spark), cache_key, rounds, merges_fp)
-    with _ENC_LOCK:
-        if cache_key is not None and key in _ENC_CACHE:
-            return _ENC_CACHE[key]
-        art = "bpe_encoded" if cache_key is not None else None
+
+    def build():
         sym = materialize(
-            spark.sql(symbols0_sql("spark", docs_view, sample=False)),
-            artifact=art,
-        )
+            spark.sql(symbols0_sql("spark", docs_view, sample=False)))
         for i, batch in enumerate(plan_merge_batches(merges, rounds)):
             view = f"__bpe_enc_{i}"
             sym.createOrReplaceTempView(view)
-            sym = materialize(spark.sql(merge_batch_sql(view, batch)),
-                              artifact=art)
-        if cache_key is not None:
-            _ENC_CACHE[key] = sym
+            sym = materialize(spark.sql(merge_batch_sql(view, batch)))
         return sym
+
+    if cache_key is None:
+        return build()
+    return artifact_time.get(spark, "bpe_encoded",
+                             (cache_key, rounds, merges_fp), build)
 
 
 def bpe_roundtrip(
@@ -545,9 +539,8 @@ def vocab_coverage(
     shape it parallelizes with the data, nothing compounds at 100×."""
     sym = _encoded_symbols(spark, docs_view, merges, rounds,
                            cache_key=cache_key)
-    view = f"__bpe_cov_{abs(hash((id(spark), cache_key, rounds))) % 10**8}"
-    sym.createOrReplaceTempView(view)
-    return spark.sql("WITH " + _vocab_coverage_tail(view).lstrip())
+    sym.createOrReplaceTempView("__bpe_cov")
+    return spark.sql("WITH " + _vocab_coverage_tail("__bpe_cov").lstrip())
 
 
 def vocab_coverage_oracle_sql(

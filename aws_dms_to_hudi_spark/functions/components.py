@@ -34,7 +34,16 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from .. import artifact_time
 from .dedup import materialize
+
+
+def _shared(spark, name: str, cache_key, build, *key):
+    """The session artifact ``name`` when ``cache_key`` (the corpus path)
+    is given; without one, a plain uncached build."""
+    if cache_key is None:
+        return build()
+    return artifact_time.get(spark, name, (cache_key, *key), build)
 
 
 def connected_components(
@@ -394,10 +403,6 @@ CROSS JOIN w
 """
 
 
-_EDGE_CACHE: dict = {}
-_EDGE_LOCK = __import__("threading").Lock()
-
-
 def copurchase_edges(spark, lineitem: str, cache_key: str | None = None):
     """Materialized undirected co-purchase edge list ``(u, v)`` with
     u < v — parts that share an order (the market-basket projection of
@@ -406,30 +411,22 @@ def copurchase_edges(spark, lineitem: str, cache_key: str | None = None):
     With ``cache_key`` (the corpus path) the edge list is built once
     per (session, corpus) — the materialize-the-graph-relation pattern
     the dedup family uses for its token index."""
-    from pyspark.sql import functions as F
 
-    from .dedup import materialize
-
-    key = (id(spark), cache_key)
-    with _EDGE_LOCK:
-        if cache_key is not None and key in _EDGE_CACHE:
-            return _EDGE_CACHE[key]
-        art = "copurchase_edges" if cache_key is not None else None
+    def build():
         items = materialize(
             spark.table(lineitem)
             .select(F.col("l_orderkey").alias("ok"),
                     F.col("l_partkey").alias("pk"))
-            .distinct(), artifact=art)
-        edges = materialize(
+            .distinct())
+        return materialize(
             items.alias("a")
             .join(items.alias("b"),
                   [F.col("a.ok") == F.col("b.ok"),
                    F.col("a.pk") < F.col("b.pk")])
             .select(F.col("a.pk").alias("u"), F.col("b.pk").alias("v"))
-            .distinct(), artifact=art)
-        if cache_key is not None:
-            _EDGE_CACHE[key] = edges
-        return edges
+            .distinct())
+
+    return _shared(spark, "copurchase_edges", cache_key, build)
 
 
 # k=80 sits just past this graph's peel threshold: rounds actually
@@ -922,9 +919,6 @@ def local_clustering(spark, lineitem: str, cache_key: str | None = None,
 KHOP_SEEDS = 8
 KHOP_HOPS = 3
 
-_SEED_META_CACHE: dict = {}
-
-
 def top_deg_meta(spark, lineitem: str, cache_key=None,
                  n: int = KHOP_SEEDS) -> tuple[list[int], int]:
     """``(top-n seed node ids, max degree)`` of the co-purchase degree
@@ -935,20 +929,14 @@ def top_deg_meta(spark, lineitem: str, cache_key=None,
     corpus) off the session-cached deg artifact, because deriving them
     inside the statements re-ran the deg TopK sort per CTE reference
     (Spark inlines CTEs) or paid a per-call 8-row checkpoint job."""
-    key = (id(spark), cache_key, n)
-    with _EDGE_LOCK:
-        if cache_key is not None and key in _SEED_META_CACHE:
-            return _SEED_META_CACHE[key]
-    from pyspark.sql import functions as F
 
-    _sym, deg = copurchase_sym_deg(spark, lineitem, cache_key)
-    rows = (deg.orderBy(F.col("d").desc(), F.col("node").asc())
-            .limit(n).select("node", "d").collect())
-    meta = ([int(r["node"]) for r in rows], int(rows[0]["d"]))
-    with _EDGE_LOCK:
-        if cache_key is not None:
-            _SEED_META_CACHE[key] = meta
-    return meta
+    def build():
+        _sym, deg = copurchase_sym_deg(spark, lineitem, cache_key)
+        rows = (deg.orderBy(F.col("d").desc(), F.col("node").asc())
+                .limit(n).select("node", "d").collect())
+        return [int(r["node"]) for r in rows], int(rows[0]["d"])
+
+    return _shared(spark, "top_deg_meta", cache_key, build, n)
 
 
 def khop_reachability_sql(dialect: str, lineitem: str = "lineitem",
@@ -1146,9 +1134,6 @@ WHERE rk <= {top}
 ORDER BY seed, rk"""
 
 
-_CC_CACHE: dict = {}
-
-
 def cc_labels(spark, pairs_df, cache_key: str | None = None,
               tag: str = "minhash"):
     """Session-keyed materialized connected-components labels over a
@@ -1171,26 +1156,17 @@ def cc_labels(spark, pairs_df, cache_key: str | None = None,
     tripwire."""
     schema_fp = tuple((f.name, f.dataType.simpleString())
                       for f in pairs_df.schema.fields)
-    key = (id(spark), cache_key, tag)
-    with _EDGE_LOCK:
-        if cache_key is not None and key in _CC_CACHE:
-            labels, cached_fp = _CC_CACHE[key]
-            if cached_fp != schema_fp:
-                raise ValueError(
-                    f"cc_labels tag {tag!r} reused for a pair relation "
-                    f"with a different schema ({cached_fp} vs "
-                    f"{schema_fp}) — pass a distinct tag per pair source"
-                )
-            return labels
-        labels = materialize(
-            connected_components_star(pairs_df),
-            artifact="cc_labels" if cache_key is not None else None)
-        if cache_key is not None:
-            _CC_CACHE[key] = (labels, schema_fp)
-        return labels
-
-
-_SYMDEG_CACHE: dict = {}
+    labels, cached_fp = _shared(
+        spark, "cc_labels", cache_key,
+        lambda: (materialize(connected_components_star(pairs_df)),
+                 schema_fp), tag)
+    if cached_fp != schema_fp:
+        raise ValueError(
+            f"cc_labels tag {tag!r} reused for a pair relation "
+            f"with a different schema ({cached_fp} vs "
+            f"{schema_fp}) — pass a distinct tag per pair source"
+        )
+    return labels
 
 
 def copurchase_sym_deg(spark, lineitem: str, cache_key: str | None = None):
@@ -1199,25 +1175,19 @@ def copurchase_sym_deg(spark, lineitem: str, cache_key: str | None = None):
     seeded traversal operators (k-hop reachability, RA link
     prediction), built once per (session, corpus) on top of
     :func:`copurchase_edges`."""
-    from pyspark.sql import functions as F
 
-    key = (id(spark), cache_key)
-    with _EDGE_LOCK:
-        if cache_key is not None and key in _SYMDEG_CACHE:
-            return _SYMDEG_CACHE[key]
-    edges = copurchase_edges(spark, lineitem, cache_key)
-    art = "copurchase_sym_deg" if cache_key is not None else None
-    sym = materialize(
-        edges.select(F.col("u").alias("src"), F.col("v").alias("dst"))
-        .unionAll(edges.select(F.col("v").alias("src"),
-                               F.col("u").alias("dst"))), artifact=art)
-    deg = materialize(
-        sym.groupBy(F.col("src").alias("node"))
-        .agg(F.count(F.lit(1)).alias("d")), artifact=art)
-    with _EDGE_LOCK:
-        if cache_key is not None:
-            _SYMDEG_CACHE[key] = (sym, deg)
-    return sym, deg
+    def build():
+        edges = copurchase_edges(spark, lineitem, cache_key)
+        sym = materialize(
+            edges.select(F.col("u").alias("src"), F.col("v").alias("dst"))
+            .unionAll(edges.select(F.col("v").alias("src"),
+                                   F.col("u").alias("dst"))))
+        deg = materialize(
+            sym.groupBy(F.col("src").alias("node"))
+            .agg(F.count(F.lit(1)).alias("d")))
+        return sym, deg
+
+    return _shared(spark, "copurchase_sym_deg", cache_key, build)
 
 
 def khop_reachability(spark, lineitem: str, cache_key: str | None = None,
@@ -1272,9 +1242,6 @@ def khop_reachability(spark, lineitem: str, cache_key: str | None = None,
             .orderBy("seed"))
 
 
-_ADJ_CACHE: dict = {}
-
-
 def oriented_adj(spark, lineitem: str, cache_key: str | None = None):
     """Materialized (deg, oriented, adj) for the degree-ordered
     co-purchase graph — the shared build behind the triangle family
@@ -1282,36 +1249,30 @@ def oriented_adj(spark, lineitem: str, cache_key: str | None = None):
     relation, oriented the (degree,id)-oriented edge list, adj each
     node's SORTED out-neighbor array. Built once per (session, corpus)
     on top of :func:`copurchase_edges`."""
-    from pyspark.sql import functions as F
 
-    key = (id(spark), cache_key)
-    with _EDGE_LOCK:
-        if cache_key is not None and key in _ADJ_CACHE:
-            return _ADJ_CACHE[key]
-    art = "oriented_adj" if cache_key is not None else None
-    edges = copurchase_edges(spark, lineitem, cache_key)
-    deg = materialize(
-        edges.select(F.col("u").alias("node"))
-        .unionAll(edges.select(F.col("v").alias("node")))
-        .groupBy("node").agg(F.count(F.lit(1)).alias("d")), artifact=art)
-    lower = (F.col("du") < F.col("dv")) | (
-        (F.col("du") == F.col("dv")) & (F.col("u") < F.col("v")))
-    oriented = (
-        edges
-        .join(deg.select(F.col("node").alias("u"),
-                         F.col("d").alias("du")), "u")
-        .join(deg.select(F.col("node").alias("v"),
-                         F.col("d").alias("dv")), "v")
-        .select(F.when(lower, F.col("u")).otherwise(F.col("v")).alias("s"),
+    def build():
+        edges = copurchase_edges(spark, lineitem, cache_key)
+        deg = materialize(
+            edges.select(F.col("u").alias("node"))
+            .unionAll(edges.select(F.col("v").alias("node")))
+            .groupBy("node").agg(F.count(F.lit(1)).alias("d")))
+        lower = (F.col("du") < F.col("dv")) | (
+            (F.col("du") == F.col("dv")) & (F.col("u") < F.col("v")))
+        oriented = (
+            edges
+            .join(deg.select(F.col("node").alias("u"),
+                             F.col("d").alias("du")), "u")
+            .join(deg.select(F.col("node").alias("v"),
+                             F.col("d").alias("dv")), "v")
+            .select(
+                F.when(lower, F.col("u")).otherwise(F.col("v")).alias("s"),
                 F.when(lower, F.col("v")).otherwise(F.col("u")).alias("t")))
-    adj = materialize(
-        oriented.groupBy("s").agg(
-            F.sort_array(F.collect_list("t")).alias("nb")), artifact=art)
-    out = (deg, oriented, adj)
-    with _EDGE_LOCK:
-        if cache_key is not None:
-            _ADJ_CACHE[key] = out
-    return out
+        adj = materialize(
+            oriented.groupBy("s").agg(
+                F.sort_array(F.collect_list("t")).alias("nb")))
+        return deg, oriented, adj
+
+    return _shared(spark, "oriented_adj", cache_key, build)
 
 
 def modularity_sql(
@@ -1502,28 +1463,20 @@ ORDER BY score DESC, node ASC
 LIMIT {top}"""
 
 
-_LPA_CACHE: dict = {}
-
-
-def lpa_labels(spark, lineitem: str, cache_key: str | None = None,
+def lpa_labels(spark, lineitem: str, cache_key: str,
                rounds: int = LPA_ROUNDS):
     """Materialized LPA label relation, once per (session, corpus) —
     consumed three times by the modularity audit (both endpoint joins +
     the degree mass), so pinning it matters on Spark (CTEs inline)."""
-    key = (id(spark), cache_key, rounds)
-    with _EDGE_LOCK:
-        if cache_key is not None and key in _LPA_CACHE:
-            return _LPA_CACHE[key]
-    edges = copurchase_edges(spark, lineitem, cache_key)
-    view = f"__lpa_edges_{abs(hash(key)) % 10**8}"
-    edges.createOrReplaceTempView(view)
-    labels = materialize(
-        spark.sql(lpa_labels_sql("spark", rounds=rounds, edges_table=view)),
-        artifact="lpa_labels" if cache_key is not None else None)
-    with _EDGE_LOCK:
-        if cache_key is not None:
-            _LPA_CACHE[key] = labels
-    return labels
+
+    def build():
+        edges = artifact_time.view(
+            spark, "lpa_edges", cache_key,
+            lambda: copurchase_edges(spark, lineitem, cache_key))
+        return materialize(spark.sql(
+            lpa_labels_sql("spark", rounds=rounds, edges_table=edges)))
+
+    return artifact_time.get(spark, "lpa_labels", (cache_key, rounds), build)
 
 
 # ---------------------------------------------------------------------------
@@ -1531,7 +1484,6 @@ def lpa_labels(spark, lineitem: str, cache_key: str | None = None,
 # ---------------------------------------------------------------------------
 
 ANF_HUBS = 32
-_ANF_CACHE: dict = {}
 
 
 def _anf_r0_sql(dialect: str, deg: str) -> str:
@@ -1695,7 +1647,7 @@ def _anf_round_bcast_sql(prev: str, sym: str) -> str:
 ) u GROUP BY v, bucket"""
 
 
-def hyperanf(spark, lineitem: str, cache_key=None,
+def hyperanf(spark, lineitem: str, cache_key: str,
              hubs: int = ANF_HUBS) -> DataFrame:
     """Spark driver for :func:`hyperanf_sql`: same round fragments,
     with each round's register relation MATERIALIZED as a temp view —
@@ -1705,30 +1657,17 @@ def hyperanf(spark, lineitem: str, cache_key=None,
     index a production deployment persists alongside the graph.
     r9: round merges broadcast the node-bounded register side
     (:func:`_anf_round_bcast_sql`) — build 15.6 s → 7.8 s at sf0.1."""
-    key = (id(spark), cache_key, hubs)
-    with _EDGE_LOCK:
-        views = _ANF_CACHE.get(key)
-    if views is None:
-        sym, deg = copurchase_sym_deg(spark, lineitem,
-                                      cache_key=cache_key)
-        tag = abs(hash(key)) % 10**8
-        sv, dv = f"__anf_sym_{tag}", f"__anf_deg_{tag}"
-        sym.createOrReplaceTempView(sv)
-        deg.createOrReplaceTempView(dv)
 
-        def mk(name, sql_text):
-            v = f"__anf_{name}_{tag}"
-            materialize(
-                spark.sql(sql_text), artifact="anf_registers"
-            ).createOrReplaceTempView(v)
-            return v
+    def mk(stage, sql_text):
+        return artifact_time.view(
+            spark, "anf_registers", (cache_key, stage),
+            lambda: materialize(spark.sql(sql_text)))
 
-        r0 = mk("r0", _anf_r0_sql("spark", dv))
-        r1 = mk("r1", _anf_round_bcast_sql(r0, sv))
-        r2 = mk("r2", _anf_round_bcast_sql(r1, sv))
-        views = (sv, dv, r1, r2)
-        with _EDGE_LOCK:
-            _ANF_CACHE[key] = views
-    sv, dv, r1, r2 = views
+    sv, dv = artifact_time.view(
+        spark, "anf_graph", cache_key,
+        lambda: copurchase_sym_deg(spark, lineitem, cache_key))
+    r0 = mk("r0", _anf_r0_sql("spark", dv))
+    r1 = mk("r1", _anf_round_bcast_sql(r0, sv))
+    r2 = mk("r2", _anf_round_bcast_sql(r1, sv))
     return spark.sql(
         "WITH " + _anf_tail_sql("spark", sv, dv, r1, r2, hubs))

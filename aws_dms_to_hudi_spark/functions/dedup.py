@@ -35,14 +35,12 @@ Scale design (100 TB corpus):
 
 from __future__ import annotations
 
-import contextlib
 import random
 import re
-import threading
 
+from .. import artifact_time
 from . import portable as P
 
-_NULL_CM = contextlib.nullcontext()
 
 # MinHash permutation constants: h_j(x) = (a_j * x + b_j) mod P.
 # Fixed seed ⇒ stable across runs/engines; baked once at import.
@@ -961,14 +959,6 @@ ORDER BY doc_a, doc_b
 # normalization is byte-identical to portable.norm_text on both engines.
 _WS_RE = re.compile(r"\s+", re.ASCII)
 
-_TOKHASH_CACHE: dict[tuple[int, str], str] = {}
-_INV_CACHE: dict[tuple[int, str, int | None], tuple[str, str]] = {}
-_SIMHASH_CACHE: dict[tuple[int, str], str] = {}
-_BIGRAM_CACHE: dict[tuple[int, str], str] = {}
-_SHPOS_CACHE: dict[tuple[int, str, int], str] = {}
-_PAIRS_CACHE: dict[tuple[int, str], str] = {}
-_TOKHASH_LOCK = threading.Lock()
-
 
 def _pytokhash(text: str) -> list[int]:
     """Per-token polynomial rolling hashes of a document, identical math
@@ -1034,7 +1024,7 @@ def _batch_tokhash(texts) -> list:
     return [hashes[offs[i]: offs[i + 1]] for i in range(len(norms))]
 
 
-def materialize(df, artifact: str | None = None):
+def materialize(df):
     """Eagerly materialize a shared artifact and truncate its lineage.
 
     Uses RELIABLE ``checkpoint()`` (replicated to the configured
@@ -1046,23 +1036,14 @@ def materialize(df, artifact: str | None = None):
     executor loss == driver loss and replication buys nothing).
     Distributed deployments should call
     ``spark.sparkContext.setCheckpointDir(...)`` at session setup.
-
-    ``artifact``: when set, the build's wall time is attributed to
-    :mod:`aws_dms_to_hudi_spark.artifact_time` under that name — pass
-    it ONLY from session-cache-miss paths (one-time builds a min-of-N
-    bench would otherwise hide), never from per-call loop-state
-    materializations, which every timed run pays anyway.
     """
-    from .. import artifact_time
-
     sc = df.sparkSession.sparkContext
-    with artifact_time.building(artifact) if artifact else _NULL_CM:
-        if sc._jsc.sc().checkpointDir().isDefined():
-            return df.checkpoint(eager=True)
-        return df.localCheckpoint()
+    if sc._jsc.sc().checkpointDir().isDefined():
+        return df.checkpoint(eager=True)
+    return df.localCheckpoint()
 
 
-def tokhash_view(spark, docs, cache_key: str, tag: str = "tokhash") -> str:
+def tokhash_view(spark, docs, cache_key: str) -> str:
     """Register (and persist) a ``(doc_id, pos, h)`` token-hash view for
     ``docs`` — the shared prefix of every shingle-based dedup operator
     (q19/q20/q21/q77). Cached per (SparkSession, cache_key): the corpus
@@ -1074,49 +1055,27 @@ def tokhash_view(spark, docs, cache_key: str, tag: str = "tokhash") -> str:
     and share across dedup jobs, rather than re-deriving per query.
     """
     from pyspark.sql import functions as F
-    from pyspark.sql.types import (
-        ArrayType,
-        LongType,
-        StructField,
-        StructType,
-    )
+    from pyspark.sql.types import ArrayType, LongType
 
-    key = (id(spark), cache_key)
-    with _TOKHASH_LOCK:
-        cached = _TOKHASH_CACHE.get(key)
-        if cached is not None:
-            return cached
+    @F.pandas_udf(ArrayType(LongType()))
+    def hash_tokens(texts):
+        import pandas as pd
 
-        @F.pandas_udf(ArrayType(LongType()))
-        def hash_tokens(texts):
-            import pandas as pd
+        return pd.Series(_batch_tokhash(texts.tolist()))
 
-            return pd.Series(_batch_tokhash(texts.tolist()))
-
-        view = f"__{tag}_{abs(hash(key)) % 10**8}"
-        # Repartition by doc_id BEFORE persisting: the corpus often
-        # arrives as few files (one partition at test scale), and every
-        # downstream stage — the shingle window, simhash groupBy —
-        # partitions by doc_id, so the cached layout already matches and
-        # those stages run wide with no extra exchange.
-        df = (
-            docs.select(
-                "doc_id",
-                F.posexplode(hash_tokens("text")).alias("pos", "h"),
-            )
-            .repartition(docs.sparkSession.sparkContext.defaultParallelism,
-                         "doc_id")
-        )
-        # Materialized (not mere persist): truncates the logical plan to
-        # a LogicalRDD so every consumer carries a tiny plan instead of
-        # re-analyzing (and shipping) the whole derivation tree.
-        df = materialize(df, artifact="tokhash")
-        df.createOrReplaceTempView(view)
-        _TOKHASH_CACHE[key] = view
-        return view
-
-
-_TOKROWS_CACHE: dict[tuple, str] = {}
+    # Repartition by doc_id BEFORE persisting: the corpus often arrives
+    # as few files (one partition at test scale), and every downstream
+    # stage — the shingle window, simhash groupBy — partitions by
+    # doc_id, so the cached layout already matches and those stages run
+    # wide with no extra exchange. Materialized (not mere persist):
+    # truncates the logical plan to a LogicalRDD so every consumer
+    # carries a tiny plan instead of re-analyzing (and shipping) the
+    # whole derivation tree.
+    return artifact_time.view(spark, "tokhash", cache_key, lambda: materialize(
+        docs.select("doc_id",
+                    F.posexplode(hash_tokens("text")).alias("pos", "h"))
+        .repartition(docs.sparkSession.sparkContext.defaultParallelism,
+                     "doc_id")))
 
 
 def token_rows_view(spark, docs, cache_key: str) -> str:
@@ -1132,30 +1091,22 @@ def token_rows_view(spark, docs, cache_key: str) -> str:
     consumer carries a tiny plan. At 100 TB this is the tokenized-
     corpus relation an LM-data pipeline persists beside its token-hash
     index (r8, guide §2.4)."""
-    from . import portable as P
 
-    key = (id(spark), cache_key)
-    with _TOKHASH_LOCK:
-        cached = _TOKROWS_CACHE.get(key)
-        if cached is not None:
-            return cached
-        tmp = f"__tokrows_src_{abs(hash(key)) % 10**8}"
-        docs.createOrReplaceTempView(tmp)
+    def build():
+        # read only while this build's SQL is analyzed, so one fixed
+        # name serves every session and corpus
+        docs.createOrReplaceTempView("__tokrows_src")
         rows = _posexplode(
             "spark", "doc_id",
             f"(SELECT doc_id, {P.tokens('text', 'spark')} AS toks "
-            f"FROM {tmp}) s",
+            "FROM __tokrows_src) s",
             "toks", "pos", "t",
         )
-        df = materialize(
+        return materialize(
             spark.sql(rows)
-            .repartition(spark.sparkContext.defaultParallelism, "doc_id"),
-            artifact="tokrows",
-        )
-        view = f"__tokrows_{abs(hash(key)) % 10**8}"
-        df.createOrReplaceTempView(view)
-        _TOKROWS_CACHE[key] = view
-        return view
+            .repartition(spark.sparkContext.defaultParallelism, "doc_id"))
+
+    return artifact_time.view(spark, "tokrows", cache_key, build)
 
 
 def minhash_pairs_view(spark, docs, cache_key: str) -> str:
@@ -1166,23 +1117,14 @@ def minhash_pairs_view(spark, docs, cache_key: str) -> str:
     dedup-detect and dedup-apply stages; computing it once per process
     mirrors that, and the connected-components iteration then starts
     from an in-memory relation instead of re-running the LSH chain."""
-    key = (id(spark), cache_key)
-    with _TOKHASH_LOCK:
-        cached = _PAIRS_CACHE.get(key)
-        if cached is not None:
-            return cached
-    inv = inv_view(spark, docs, cache_key)
-    sig = sig_view(spark, docs, cache_key)
-    sql = minhash_lsh_sql("spark", inv_tables=inv, sig_table=sig)
-    with _TOKHASH_LOCK:
-        cached = _PAIRS_CACHE.get(key)
-        if cached is not None:
-            return cached
-        name = f"__mh_pairs_{abs(hash(key)) % 10**8}"
-        df = materialize(spark.sql(sql), artifact="minhash_pairs")
-        df.createOrReplaceTempView(name)
-        _PAIRS_CACHE[key] = name
-        return name
+
+    def build():
+        inv = inv_view(spark, docs, cache_key)
+        sig = sig_view(spark, docs, cache_key)
+        return materialize(spark.sql(
+            minhash_lsh_sql("spark", inv_tables=inv, sig_table=sig)))
+
+    return artifact_time.view(spark, "minhash_pairs", cache_key, build)
 
 
 def shingle_pos_view(spark, docs, cache_key: str, n: int = 5) -> str:
@@ -1195,29 +1137,19 @@ def shingle_pos_view(spark, docs, cache_key: str, n: int = 5) -> str:
     reference (docfreq + the join-back); both now scan this one
     in-memory relation. The Horner form is byte-identical to
     ``shingle_cte``/``dup_span_sql``'s inline expression."""
-    key = (id(spark), cache_key, n)
-    with _TOKHASH_LOCK:
-        cached = _SHPOS_CACHE.get(key)
-        if cached is not None:
-            return cached
-    th = tokhash_view(spark, docs, cache_key)
-    g = "h"
-    for k in range(1, n):
-        g = f"(({g}) * {SH_A} + lead(h, {k}) OVER w) % {P.HASH_P}"
-    sql = f"""
+
+    def build():
+        th = tokhash_view(spark, docs, cache_key)
+        g = "h"
+        for k in range(1, n):
+            g = f"(({g}) * {SH_A} + lead(h, {k}) OVER w) % {P.HASH_P}"
+        return materialize(spark.sql(f"""
 SELECT doc_id, pos, g FROM (
   SELECT doc_id, pos, {g} AS g FROM {th}
   WINDOW w AS (PARTITION BY doc_id ORDER BY pos)
-) WHERE g IS NOT NULL"""
-    with _TOKHASH_LOCK:
-        cached = _SHPOS_CACHE.get(key)
-        if cached is not None:
-            return cached
-        name = f"__shpos{n}_{abs(hash(key)) % 10**8}"
-        df = materialize(spark.sql(sql), artifact="shingle_pos")
-        df.createOrReplaceTempView(name)
-        _SHPOS_CACHE[key] = name
-        return name
+) WHERE g IS NOT NULL"""))
+
+    return artifact_time.view(spark, "shingle_pos", (cache_key, n), build)
 
 
 def bigram_rows_view(spark, docs, cache_key: str) -> str:
@@ -1231,30 +1163,20 @@ def bigram_rows_view(spark, docs, cache_key: str) -> str:
     reference; consumers scan this one in-memory relation instead. At
     100 TB this is the persisted n-gram table of an LM-data pipeline —
     derived once beside the token-hash index it rolls up."""
-    key = (id(spark), cache_key)
-    with _TOKHASH_LOCK:
-        cached = _BIGRAM_CACHE.get(key)
-        if cached is not None:
-            return cached
-    th = tokhash_view(spark, docs, cache_key)
-    # pos rides along (r8): the positional n=2 shingle hash is a pure
-    # projection of (a, b), so the phrase-search index lookup (q195)
-    # reads this relation instead of re-running the lead() window.
-    sql = f"""
+
+    def build():
+        th = tokhash_view(spark, docs, cache_key)
+        # pos rides along (r8): the positional n=2 shingle hash is a
+        # pure projection of (a, b), so the phrase-search index lookup
+        # (q195) reads this relation instead of re-running the window.
+        return materialize(spark.sql(f"""
 SELECT doc_id, pos, a, b FROM (
   SELECT doc_id, pos, h AS a,
          lead(h) OVER (PARTITION BY doc_id ORDER BY pos) AS b
   FROM {th}
-) WHERE b IS NOT NULL"""
-    with _TOKHASH_LOCK:
-        cached = _BIGRAM_CACHE.get(key)
-        if cached is not None:
-            return cached
-        name = f"__bigrams_{abs(hash(key)) % 10**8}"
-        df = materialize(spark.sql(sql), artifact="bigram")
-        df.createOrReplaceTempView(name)
-        _BIGRAM_CACHE[key] = name
-        return name
+) WHERE b IS NOT NULL"""))
+
+    return artifact_time.view(spark, "bigram", cache_key, build)
 
 
 def simhash_view(spark, docs, cache_key: str) -> str:
@@ -1262,25 +1184,16 @@ def simhash_view(spark, docs, cache_key: str) -> str:
     relation built from the cached token-hash view — one int64 row per
     document, the artifact a production pipeline would persist as its
     simhash index."""
-    key = (id(spark), cache_key)
-    with _TOKHASH_LOCK:
-        cached = _SIMHASH_CACHE.get(key)
-        if cached is not None:
-            return cached
-    th = tokhash_view(spark, docs, cache_key)
-    inner = simhash_sql("spark", th_table=th)
-    # Reuse the generator's own CTE chain up to ``sh``.
-    prefix = inner.split(",\nchunks AS")[0]
-    sql = f"{prefix}\nSELECT doc_id, simhash FROM sh"
-    with _TOKHASH_LOCK:
-        cached = _SIMHASH_CACHE.get(key)
-        if cached is not None:
-            return cached
-        name = f"__simhash_{abs(hash(key)) % 10**8}"
-        df = materialize(spark.sql(sql), artifact="simhash")
-        df.createOrReplaceTempView(name)
-        _SIMHASH_CACHE[key] = name
-        return name
+
+    def build():
+        th = tokhash_view(spark, docs, cache_key)
+        inner = simhash_sql("spark", th_table=th)
+        # Reuse the generator's own CTE chain up to ``sh``.
+        prefix = inner.split(",\nchunks AS")[0]
+        return materialize(
+            spark.sql(f"{prefix}\nSELECT doc_id, simhash FROM sh"))
+
+    return artifact_time.view(spark, "simhash", cache_key, build)
 
 
 def inv_view(
@@ -1297,33 +1210,17 @@ def inv_view(
     dedup index you'd materialize to parquet once and share across the
     Jaccard / MinHash / grouping jobs.
     """
-    key = (id(spark), cache_key, max_df)
-    with _TOKHASH_LOCK:
-        cached = _INV_CACHE.get(key)
-        if cached is not None:
-            return cached
-    th = tokhash_view(spark, docs, cache_key)
-    sql = f"WITH {_inv_cte('spark', '<unused>', max_df, th)} SELECT doc_id, g FROM inv"
-    inv_name = f"__inv_{abs(hash(key)) % 10**8}"
-    sizes_name = f"__sizes_{abs(hash(key)) % 10**8}"
-    with _TOKHASH_LOCK:
-        cached = _INV_CACHE.get(key)
-        if cached is not None:
-            return cached
-        inv_df = materialize(spark.sql(sql), artifact="inv")
-        inv_df.createOrReplaceTempView(inv_name)
-        sizes_df = materialize(
-            spark.table(inv_name).groupBy("doc_id").count()
-            .withColumnRenamed("count", "n"),
-            artifact="inv",
-        )
-        sizes_df.createOrReplaceTempView(sizes_name)
-        _INV_CACHE[key] = (inv_name, sizes_name)
-        return inv_name, sizes_name
 
+    def build():
+        th = tokhash_view(spark, docs, cache_key)
+        inv = materialize(spark.sql(
+            f"WITH {_inv_cte('spark', '<unused>', max_df, th)} "
+            "SELECT doc_id, g FROM inv"))
+        sizes = materialize(
+            inv.groupBy("doc_id").count().withColumnRenamed("count", "n"))
+        return inv, sizes
 
-_SIG_CACHE: dict[tuple[int, str], str] = {}
-_SSH_CACHE: dict[tuple[int, str], str] = {}
+    return artifact_time.view(spark, "inv", (cache_key, max_df), build)
 
 
 def source_shingles_view(spark, docs, table: str, cache_key: str) -> str:
@@ -1332,27 +1229,16 @@ def source_shingles_view(spark, docs, table: str, cache_key: str) -> str:
     set the cross-source contamination matrix (q262) consumes through
     four inlined references (see :func:`source_overlap_sql`). Same
     lifetime and accounting as the other corpus indexes."""
-    key = (id(spark), cache_key)
-    with _TOKHASH_LOCK:
-        cached = _SSH_CACHE.get(key)
-        if cached is not None:
-            return cached
-    inv_name, _ = inv_view(spark, docs, cache_key, max_df=None)
-    name = f"__ssh_{abs(hash(key)) % 10**8}"
-    with _TOKHASH_LOCK:
-        cached = _SSH_CACHE.get(key)
-        if cached is not None:
-            return cached
-        df = materialize(
-            spark.sql(
-                f"SELECT /*+ BROADCAST(d) */ DISTINCT d.source AS src, "
-                f"v.g FROM {inv_name} v JOIN {table} d "
-                "ON d.doc_id = v.doc_id"),
-            artifact="q262_source_shingles",
-        )
-        df.createOrReplaceTempView(name)
-        _SSH_CACHE[key] = name
-        return name
+
+    def build():
+        inv_name, _ = inv_view(spark, docs, cache_key, max_df=None)
+        return materialize(spark.sql(
+            f"SELECT /*+ BROADCAST(d) */ DISTINCT d.source AS src, "
+            f"v.g FROM {inv_name} v JOIN {table} d "
+            "ON d.doc_id = v.doc_id"))
+
+    return artifact_time.view(spark, "q262_source_shingles", cache_key,
+                              build)
 
 
 def sig_view(spark, docs, cache_key: str) -> str:
@@ -1370,29 +1256,17 @@ def sig_view(spark, docs, cache_key: str) -> str:
     inverted index (one narrow row per doc), so it gets the same
     session lifetime as inv/sizes; every bands reference becomes a
     columnar scan of |docs| rows."""
-    key = (id(spark), cache_key)
-    with _TOKHASH_LOCK:
-        cached = _SIG_CACHE.get(key)
-        if cached is not None:
-            return cached
-    inv_name, _ = inv_view(spark, docs, cache_key)
-    sig_cols = ", ".join(
-        f"MIN(({a} * g + {b}) % {P.HASH_P}) AS m{j}"
-        for j, (a, b) in enumerate(MINHASH_AB)
-    )
-    name = f"__sig_{abs(hash(key)) % 10**8}"
-    with _TOKHASH_LOCK:
-        cached = _SIG_CACHE.get(key)
-        if cached is not None:
-            return cached
-        df = materialize(
-            spark.sql(f"SELECT doc_id, {sig_cols} FROM {inv_name} "
-                      "GROUP BY doc_id"),
-            artifact="minhash_sig",
+
+    def build():
+        inv_name, _ = inv_view(spark, docs, cache_key)
+        sig_cols = ", ".join(
+            f"MIN(({a} * g + {b}) % {P.HASH_P}) AS m{j}"
+            for j, (a, b) in enumerate(MINHASH_AB)
         )
-        df.createOrReplaceTempView(name)
-        _SIG_CACHE[key] = name
-        return name
+        return materialize(spark.sql(
+            f"SELECT doc_id, {sig_cols} FROM {inv_name} GROUP BY doc_id"))
+
+    return artifact_time.view(spark, "minhash_sig", cache_key, build)
 
 
 # ---------------------------------------------------------------------------

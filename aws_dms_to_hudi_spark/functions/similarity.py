@@ -32,6 +32,7 @@ import random
 import numpy as np
 import pandas as pd
 
+from .. import artifact_time
 from . import portable as P
 
 DIM = 64
@@ -964,15 +965,9 @@ def power_iteration(spark, table: str, iters: int = PI_ITERS):
     checkpoint job on EVERY call."""
     from .dedup import materialize
 
-    key = (id(spark), table)
-    with _PQ_LOCK:
-        view = _PI_IV_CACHE.get(key)
-        if view is None:
-            iv = materialize(spark.sql(_pi_iv_sql("spark", table)),
-                             artifact="pi_iv")
-            view = f"__pi_iv_{abs(hash(key)) % 10**8}"
-            iv.createOrReplaceTempView(view)
-            _PI_IV_CACHE[key] = view
+    view = artifact_time.view(
+        spark, "pi_iv", table,
+        lambda: materialize(spark.sql(_pi_iv_sql("spark", table))))
 
     def trunc_div(a: int, b: int) -> int:
         # DuckDB's // truncates toward zero; Python's floors — pin
@@ -1197,12 +1192,6 @@ def pq_adc_sql(dialect: str, table: str = "embeddings",
     )
 
 
-_PQ_LOCK = __import__("threading").Lock()
-_PQ_CACHE: dict[tuple[int, str], tuple[str, str]] = {}  # -> (iv, c1) views
-_PI_IV_CACHE: dict[tuple[int, str], str] = {}  # power-iteration scaled rows
-_EMB_ROWS_CACHE: dict[tuple[int, str], str] = {}  # exploded embedding rows
-
-
 def emb_rows_view(spark, table: str, cache_key=None) -> str:
     """Register (and persist) the exploded scaled-coordinate relation
     ``(vec_id, label, dim, x)`` — :func:`_emb_rows` materialized once
@@ -1213,16 +1202,9 @@ def emb_rows_view(spark, table: str, cache_key=None) -> str:
     next to its packed embeddings (the emb-side twin of tokhash)."""
     from .dedup import materialize
 
-    key = (id(spark), cache_key if cache_key is not None else table)
-    with _PQ_LOCK:
-        view = _EMB_ROWS_CACHE.get(key)
-        if view is None:
-            df = materialize(spark.sql(_emb_rows("spark", table)),
-                             artifact="emb_rows")
-            view = f"__emb_rows_{abs(hash(key)) % 10**8}"
-            df.createOrReplaceTempView(view)
-            _EMB_ROWS_CACHE[key] = view
-        return view
+    return artifact_time.view(
+        spark, "emb_rows", cache_key if cache_key is not None else table,
+        lambda: materialize(spark.sql(_emb_rows("spark", table))))
 
 
 def pq_adc(spark, table: str, num_queries: int = 5, k: int = 3):
@@ -1232,22 +1214,15 @@ def pq_adc(spark, table: str, num_queries: int = 5, k: int = 3):
     pattern) — then run encode + ADC over the cached views."""
     from .dedup import materialize
 
-    key = (id(spark), table)
-    with _PQ_LOCK:
-        views = _PQ_CACHE.get(key)
-        if views is None:
-            tag = abs(hash(key)) % 10**8
-            iv = materialize(spark.sql(_pq_iv_sql("spark", table)),
-                             artifact="pq_codebook")
-            ivv = f"__pq_iv_{tag}"
-            iv.createOrReplaceTempView(ivv)
-            c1 = materialize(spark.sql(_pq_c1_sql("spark", ivv)),
-                             artifact="pq_codebook")
-            c1v = f"__pq_c1_{tag}"
-            c1.createOrReplaceTempView(c1v)
-            views = (ivv, c1v)
-            _PQ_CACHE[key] = views
-    return spark.sql(_pq_main_sql(views[0], views[1], num_queries, k))
+
+    def mk(stage, sql_text):
+        return artifact_time.view(
+            spark, "pq_codebook", (table, stage),
+            lambda: materialize(spark.sql(sql_text)))
+
+    ivv = mk("iv", _pq_iv_sql("spark", table))
+    c1v = mk("c1", _pq_c1_sql("spark", ivv))
+    return spark.sql(_pq_main_sql(ivv, c1v, num_queries, k))
 
 
 JL_K = 16  # target dimensionality of the sign random projection
@@ -1672,10 +1647,6 @@ def ivfpq_sql(dialect: str, table: str = "embeddings",
                               "assign", num_queries, k))
 
 
-_IVFPQ_LOCK = __import__("threading").Lock()
-_IVFPQ_CACHE: dict = {}
-
-
 def ivfpq(spark, table: str, num_queries: int = 5, k: int = 3):
     """Engine-side IVF-PQ: materialize the multi-referenced train-side
     artifacts ONCE per (session, corpus) — exploded coords, coarse
@@ -1685,30 +1656,21 @@ def ivfpq(spark, table: str, num_queries: int = 5, k: int = 3):
     :func:`pq_adc` pattern, composed)."""
     from .dedup import materialize
 
-    key = (id(spark), table)
-    with _IVFPQ_LOCK:
-        views = _IVFPQ_CACHE.get(key)
-        if views is None:
-            tag = abs(hash(key)) % 10**8
 
-            def mk(name, sql_text):
-                v = f"__ivfpq_{name}_{tag}"
-                materialize(
-                    spark.sql(sql_text), artifact="ivfpq_index"
-                ).createOrReplaceTempView(v)
-                return v
+    def mk(stage, sql_text):
+        return artifact_time.view(
+            spark, "ivfpq_index", (table, stage),
+            lambda: materialize(spark.sql(sql_text)))
 
-            ivv = mk("iv", _pq_iv_sql("spark", table))
-            coarse = mk("coarse", _ivfpq_coarse_sql(ivv))
-            cdist = mk("cdist", _ivfpq_cdist_sql(ivv, coarse))
-            assign = mk("assign", _ivfpq_assign_sql(cdist))
-            res = mk("res", _ivfpq_res_sql(ivv, assign, coarse))
-            c1 = mk("c1", _pq_c1_sql("spark", res))
-            codes = mk("codes", _ivfpq_codes_sql(res, c1))
-            views = (ivv, coarse, cdist, c1, codes, assign)
-            _IVFPQ_CACHE[key] = views
-    return spark.sql(
-        "WITH " + _ivfpq_tail_sql(*views, num_queries, k).lstrip())
+    ivv = mk("iv", _pq_iv_sql("spark", table))
+    coarse = mk("coarse", _ivfpq_coarse_sql(ivv))
+    cdist = mk("cdist", _ivfpq_cdist_sql(ivv, coarse))
+    assign = mk("assign", _ivfpq_assign_sql(cdist))
+    res = mk("res", _ivfpq_res_sql(ivv, assign, coarse))
+    c1 = mk("c1", _pq_c1_sql("spark", res))
+    codes = mk("codes", _ivfpq_codes_sql(res, c1))
+    return spark.sql("WITH " + _ivfpq_tail_sql(
+        ivv, coarse, cdist, c1, codes, assign, num_queries, k).lstrip())
 
 
 # ---------------------------------------------------------------------------
@@ -1716,7 +1678,6 @@ def ivfpq(spark, table: str, num_queries: int = 5, k: int = 3):
 # ---------------------------------------------------------------------------
 
 KC_K = 8
-_KC_CACHE: dict[tuple, tuple] = {}
 
 
 def _kc_d2(a: str, b: str, dialect: str) -> str:
@@ -1820,41 +1781,31 @@ def kcenter(spark, table: str, cache_key, k: int = KC_K):
     per (session, corpus): selection is run once, consumers re-read."""
     from .dedup import materialize
 
-    key = (id(spark), cache_key, k)
-    views = _KC_CACHE.get(key)
-    if views is None:
-        tag = abs(hash(key)) % 10**8
-        upd = _kc_d2("e.embedding", "c.embedding", "spark")
-        seed_d2 = upd
-        e = f"(SELECT vec_id, embedding FROM {table})"
+    upd = _kc_d2("e.embedding", "c.embedding", "spark")
+    e = f"(SELECT vec_id, embedding FROM {table})"
 
-        def mk(name, sql_text):
-            v = f"__kc_{name}_{tag}"
-            materialize(
-                spark.sql(sql_text), artifact="kcenter_coreset"
-            ).createOrReplaceTempView(v)
-            return v
+    def mk(stage, sql_text):
+        return artifact_time.view(
+            spark, "kcenter_coreset", (cache_key, k, stage),
+            lambda: materialize(spark.sql(sql_text)))
 
-        c = [mk("c0", f"SELECT vec_id, embedding FROM {e} e"
-                      " ORDER BY vec_id LIMIT 1")]
-        d = [mk("d0", f"SELECT e.vec_id, {seed_d2} AS bd FROM {e} e"
-                      f" CROSS JOIN {c[0]} c")]
-        for r in range(1, k):
-            c.append(mk(
-                f"c{r}",
-                f"SELECT e.vec_id, e.embedding, d.bd FROM {d[r - 1]} d"
-                f" JOIN {e} e ON e.vec_id = d.vec_id"
-                f" ORDER BY d.bd DESC, d.vec_id LIMIT 1",
-            ))
-            d.append(mk(
-                f"d{r}",
-                f"SELECT d.vec_id, LEAST(d.bd, {upd}) AS bd"
-                f" FROM {d[r - 1]} d JOIN {e} e ON e.vec_id = d.vec_id"
-                f" CROSS JOIN {c[r]} c",
-            ))
-        _KC_CACHE[key] = (tuple(c), tuple(d))
-        views = _KC_CACHE[key]
-    c, d = views
+    c = [mk("c0", f"SELECT vec_id, embedding FROM {e} e"
+                  " ORDER BY vec_id LIMIT 1")]
+    d = [mk("d0", f"SELECT e.vec_id, {upd} AS bd FROM {e} e"
+                  f" CROSS JOIN {c[0]} c")]
+    for r in range(1, k):
+        c.append(mk(
+            f"c{r}",
+            f"SELECT e.vec_id, e.embedding, d.bd FROM {d[r - 1]} d"
+            f" JOIN {e} e ON e.vec_id = d.vec_id"
+            f" ORDER BY d.bd DESC, d.vec_id LIMIT 1",
+        ))
+        d.append(mk(
+            f"d{r}",
+            f"SELECT d.vec_id, LEAST(d.bd, {upd}) AS bd"
+            f" FROM {d[r - 1]} d JOIN {e} e ON e.vec_id = d.vec_id"
+            f" CROSS JOIN {c[r]} c",
+        ))
     rows = ["SELECT 0 AS r, vec_id AS center_id,"
             f" CAST(0.0 AS DOUBLE) AS radius FROM {c[0]}"]
     for r in range(1, k):

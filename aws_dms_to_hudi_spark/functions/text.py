@@ -21,6 +21,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from .. import artifact_time
 from . import portable as P
 
 # Marker-token language model: a deterministic, vocabulary-derived n-gram
@@ -343,10 +344,6 @@ nn AS (SELECT COUNT(*) AS n FROM {table}),
 prior AS (SELECT lang, COUNT(*) AS nd FROM {table} GROUP BY lang)
 """
 
-_NB_LOCK = __import__("threading").Lock()
-_NB_CACHE: dict = {}
-
-
 def naive_bayes_model_views(
     spark, table: str, th_table: str, cache_key: str
 ) -> dict[str, str]:
@@ -360,38 +357,26 @@ def naive_bayes_model_views(
     classifier runs."""
     from .dedup import materialize
 
-    key = (id(spark), cache_key)
-    with _NB_LOCK:
-        cached = _NB_CACHE.get(key)
-        if cached is not None:
-            return cached
-        dtc = materialize(spark.sql(
+    dtc = artifact_time.view(
+        spark, "nb_langid_dtc", cache_key, lambda: materialize(spark.sql(
             f"SELECT doc_id, h, CAST(COUNT(*) AS BIGINT) AS occ "
-            f"FROM {th_table} GROUP BY doc_id, h"
-        ), artifact="nb_langid_model")
-        n = len(_NB_CACHE)
-        names = {"dtc": f"__nb_dtc_{n}", "lp": f"__nb_lp_{n}",
-                 "lz": f"__nb_lz_{n}"}
-        dtc.createOrReplaceTempView(names["dtc"])
-        model = _NB_MODEL_SQL.format(dtc=names["dtc"], table=table)
-        lp = materialize(spark.sql(model + """
+            f"FROM {th_table} GROUP BY doc_id, h")))
+    model = _NB_MODEL_SQL.format(dtc=dtc, table=table)
+    lp, lz = artifact_time.view(
+        spark, "nb_langid_model", cache_key, lambda: (
+            materialize(spark.sql(model + """
 SELECT l.lang, l.h,
        CAST(ln(CAST(l.c + 1 AS DOUBLE) / CAST(t.tot + vv.v AS DOUBLE))
             AS DECIMAL(18,12)) AS lnp
-FROM ltc l JOIN ltot t ON l.lang = t.lang CROSS JOIN vv""",
-        ), artifact="nb_langid_model")
-        lz = materialize(spark.sql(model + """
+FROM ltc l JOIN ltot t ON l.lang = t.lang CROSS JOIN vv""")),
+            materialize(spark.sql(model + """
 SELECT t.lang,
        CAST(ln(CAST(1 AS DOUBLE) / CAST(t.tot + vv.v AS DOUBLE))
             AS DECIMAL(18,12)) AS lnz,
        CAST(ln(CAST(p.nd AS DOUBLE) / CAST(nn.n AS DOUBLE))
             AS DECIMAL(18,12)) AS lnprior
-FROM ltot t JOIN prior p ON t.lang = p.lang CROSS JOIN vv CROSS JOIN nn""",
-        ), artifact="nb_langid_model")
-        lp.createOrReplaceTempView(names["lp"])
-        lz.createOrReplaceTempView(names["lz"])
-        _NB_CACHE[key] = names
-        return names
+FROM ltot t JOIN prior p ON t.lang = p.lang CROSS JOIN vv CROSS JOIN nn"""))))
+    return {"dtc": dtc, "lp": lp, "lz": lz}
 
 
 def naive_bayes_confusion_sql(

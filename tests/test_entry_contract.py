@@ -29,6 +29,16 @@ def test_oracleless_query_runs(spark, sf_correct, name):
     assert df.count() >= 0
 
 
+def test_q222_insert_overwrite_matches_oracle_at_smoke_scale(spark,
+                                                             sf_smoke):
+    """At sf0.001 a nation named by the overwrite predicate has only
+    odd-key suppliers, so its partition gets no restated row: it must
+    still be replaced (emptied), as the oracle says."""
+    name = "q222_insert_overwrite"
+    oracle = duck_con(sf_smoke).execute(ORACLES[name]).df()
+    assert_same(QUERIES[name](spark, sf_smoke), oracle)
+
+
 def test_entry_smoke(spark):
     df = entry_mod.entry(spark)
     assert df.count() > 0

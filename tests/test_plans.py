@@ -38,10 +38,10 @@ def test_q01_parquet_pushdown_past_cache_gate(spark, sf_correct,
                                               monkeypatch):
     """Above the cache size gate (a 100 TB fact table), the same query
     must plan as a plain parquet scan with filters and projection
-    pushed to the source — the path a real cluster takes."""
+    pushed to the source — the path a real cluster takes. A new session
+    gets its own base tables, built under the patched gate."""
     monkeypatch.setattr(entry_mod, "_CACHE_MAX_BYTES", 0)
-    monkeypatch.setattr(entry_mod, "_T_CACHE", {})
-    plan = _plan(spark, sf_correct, "q01_scan_projection")
+    plan = _plan(spark.newSession(), sf_correct, "q01_scan_projection")
     assert ("PushedFilters: [IsNotNull(l_discount), "
             "GreaterThan(l_discount,0.05)") in plan
     assert ("ReadSchema: struct<l_orderkey:bigint,l_quantity:double,"
