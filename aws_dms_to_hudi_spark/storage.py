@@ -56,6 +56,7 @@ from typing import Any
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 from aws_dms_to_hudi_spark.config import MERGE_ON_READ, TableConfig
 from aws_dms_to_hudi_spark.operators.merge import precombine, upsert_merge
@@ -105,6 +106,10 @@ class Commit:
     # manifests written before the field existed; those resolve as
     # "older than any stamped commit".
     ts: float | None = None
+    # Spark schema JSON of a snapshot that maps no data dir: a
+    # partitioned write of zero rows makes no partition dir, so no file
+    # footer describes the table. None whenever ``data`` is non-empty.
+    schema: str | None = None
 
     def to_json(self) -> str:
         return json.dumps(
@@ -121,6 +126,7 @@ class Commit:
                 "cdc_dir": self.cdc_dir,
                 "dv": self.dv,
                 "ts": self.ts,
+                "schema": self.schema,
             },
             indent=1,
         )
@@ -141,6 +147,7 @@ class Commit:
             cdc_dir=d.get("cdc_dir"),
             dv=d.get("dv", []),
             ts=d.get("ts"),
+            schema=d.get("schema"),
         )
 
 
@@ -522,7 +529,7 @@ class CuratedTable:
         if commit is None:
             return None
         rel_dirs = list(commit.data.values())
-        if filters and (read_optimized or not commit.deltas):
+        if filters and rel_dirs and (read_optimized or not commit.deltas):
             rel_dirs = self._prune_stats_dirs(commit, filters)
             if not rel_dirs:  # every dir proven empty: typed empty result
                 full = self._read_dirs(list(commit.data.values()))
@@ -530,6 +537,9 @@ class CuratedTable:
                 rel_dirs = None
         if rel_dirs is not None:
             base = self._read_dirs(rel_dirs)
+        if base is None and commit.schema:  # a zero-row partitioned write
+            base = self.spark.createDataFrame(
+                [], StructType.fromJson(json.loads(commit.schema)))
         if commit.deltas and not read_optimized:
             deltas = self._read_dirs(commit.deltas)
             base = upsert_merge(
@@ -945,6 +955,7 @@ class CuratedTable:
             changelog=list(data.values()),
             key_bounds=self._commit_key_bounds(),
             col_stats=self._assemble_stats(None, data, vdir),
+            schema=None if data else out.schema.json(),
         )
         self._write_commit(commit)
         return commit
@@ -1375,6 +1386,7 @@ class CuratedTable:
             col_stats=self._assemble_stats(prev, new_data, vdir),
             cdc_dir=cdcdir,
             dv=list(prev.dv),
+            schema=None if new_data else merged.schema.json(),
         )
         self._update_record_index(batch)
         self._update_secondary_index(batch)
@@ -1562,9 +1574,6 @@ class CuratedTable:
                 str(self.root / vdir)
             )
             fresh = self._scan_partition_dirs(vdir)
-            # an all-tombstone batch survives as zero rows: the scan's
-            # empty-dir sentinel must not enter the manifest
-            fresh = {k: v for k, v in fresh.items() if k}
             new_data = dict(prev.data)
             for v in touched:
                 new_data.pop(_pdir(pcol, v), None)
@@ -1589,6 +1598,7 @@ class CuratedTable:
             key_bounds=self._commit_key_bounds(),
             col_stats=self._assemble_stats(prev, new_data, vdir),
             dv=list(prev.dv),
+            schema=None if new_data else batch.schema.json(),
         )
         self._write_commit(commit)
         return commit
@@ -1974,8 +1984,9 @@ class CuratedTable:
         ).collect()[0]
         out = []
         for c in cols:
-            mn = float(stats[f"mn_{c}"])
-            mx = float(stats[f"mx_{c}"])
+            mn, mx = stats[f"mn_{c}"], stats[f"mx_{c}"]
+            if mn is None:  # no rows, or all NULL: an empty range
+                mn = mx = 0.0
             span = (mx - mn) or 1.0
             out.append(
                 F.least(
@@ -2124,9 +2135,7 @@ class CuratedTable:
             .partitionBy(pcol)
             .parquet(str(self.root / vtoken))
         )
-        fresh = {
-            k: v for k, v in self._scan_partition_dirs(vtoken).items() if k
-        }
+        fresh = self._scan_partition_dirs(vtoken)
         stats = (
             self._stats_for_vdir(vtoken) if cfg.stats_columns else None
         )
@@ -2821,15 +2830,16 @@ class CuratedTable:
         return (c.version + 1) if c else 1
 
     def _scan_partition_dirs(self, vdir: str) -> dict[str, str]:
-        """Map hive-style partition dirs written under a version dir."""
+        """Map hive-style partition dirs written under a version dir. A
+        write of zero rows makes none, and maps none: an empty
+        partitioned table has no partitions (never the unpartitioned
+        ``""`` key, which a partitioned handle refuses)."""
         base = self.root / vdir
-        out = {}
-        for child in sorted(base.iterdir()):
-            if child.is_dir() and "=" in child.name:
-                out[child.name] = f"{vdir}/{child.name}"
-        if not out:
-            out[""] = vdir
-        return out
+        return {
+            child.name: f"{vdir}/{child.name}"
+            for child in sorted(base.iterdir())
+            if child.is_dir() and "=" in child.name
+        }
 
 
 def _version_of(rel_dir: str) -> str:

@@ -18,107 +18,12 @@ import __spark_entry__ as entry_mod
 from aws_dms_to_hudi_spark.session import get_spark
 
 
-# Queries whose result is a handful of rows (aggregates / LIMIT k): timing
-# ends at collect(), like a user fetching the answer. Large row-stream
-# queries are forced through the no-op sink instead, so the full plan runs
-# distributed without charging the bench for driver-side serialization.
-SMALL_OUTPUT = {
-    "q02_agg_pricing_summary",
-    "q03_join_broadcast_dim",
-    "q04_multi_join",
-    "q05_anti_join",
-    "q08_topk",
-    "q09_intersect",
-    "q10_rollup",
-    "q11_scalar_functions",
-    "q12_exact_distinct",
-    "q12_approx_distinct",
-    "q14_events_json_agg",
-    "q17_lang_id_confusion",
-    "q22_cosine_topk",
-    "q23_ann_lsh",
-    "q24_embedding_neardup",
-    "q26_events_window",
-    "q27_part_supplier_revenue",
-    "q28_top_suppliers_per_nation",
-    "q30_cube",
-    "q32_hash_split",
-    "q34_ann_ivf",
-    "q35_token_doc_freq",
-    "q36_stratified_sample",
-    "q39_stat_aggregates",
-    "q42_except",
-    "q43_pivot",
-    "q44_exists_semi",
-    "q45_local_supplier_volume",
-    "q47_conditional_agg",
-    "q48_string_agg",
-    "q51_grouping_sets",
-    "q54_union_all_distinct",
-    "q58_curation_pipeline",
-    "q60_posexplode_tokens",
-    "q61_date_spine",
-    "q64_salted_join",
-    "q67_pandas_udaf",
-    "q69_shipping_priority",
-    "q70_returned_items",
-    "q73_two_stage_distinct",
-    "q74_percentile_buckets",
-    "q75_not_in_null_trap",
-    "q78_funnel_conversion",
-    "q79_retention_cohorts",
-    "q80_decontamination",
-    "q81_canonical_selection",
-    "q82_token_budget",
-    "q83_doc_packing",
-    "q84_unpivot",
-    "q85_tfidf_search",
-    "q87_hll_sketch_rollup",
-    "q89_skew_profile",
-    "q91_weighted_sample",
-    "q97_waiting_suppliers",
-    "q98_dormant_customers",
-    "q99_label_centroids",
-    "q100_centroid_assign",
-    "q105_volume_shipping",
-    "q110_auto_salted_join",
-    "q111_large_volume_customers",
-    "q112_order_priority",
-    "q113_promo_revenue",
-    "q106_market_share",
-    "q107_event_transitions",
-    "q139_regr_family",
-    "q140_bitwise_agg",
-    "q141_median_mode",
-    "q142_map_ops",
-    "q144_entropy_gini",
-    "q145_null_safe_join",
-    "q146_weighted_percentile",
-    "q147_pareto_frontier",
-    "q148_equiwidth_histogram",
-    "q149_decile_lift",
-    "q228_column_stats_skipping",
-    "q231_stream_outer_join",
-    "q232_ks_drift",
-    "q234_pseudonymization",
-    "q235_hard_negative_mining",
-    "q240_matryoshka_audit",
-    "q241_incremental_topk",
-    "q242_novelty_curve",
-    "q243_augment_dropout",
-    "q244_exact_quota_sample",
-    "q245_benford_audit",
-    "q246_classifier_kappa",
-    "q247_snapshot_drift",
-    "q249_heavy_hitters",
-    "q250_padding_waste",
-    "q251_dedup_threshold_curve",
-    "q252_embedding_quality",
-}
-
-
 def force(df, name: str = "") -> None:
-    if name in SMALL_OUTPUT:
+    """Run ``df`` the way gate ``name`` declares (``Gate.collect``):
+    collect a handful-of-rows result, force anything else through the
+    no-op sink."""
+    gate = entry_mod.GATES.get(name)
+    if gate is not None and gate.collect:
         df.collect()
     else:
         df.write.format("noop").mode("overwrite").save()
@@ -155,15 +60,12 @@ def main() -> None:
     idle = wait_for_idle()
 
     spark = get_spark("bench")
-    # Canonical numeric order, independent of the driver-window rotation
-    # in queries() — keeps bench timings comparable across rounds.
-    queries = dict(sorted(
-        entry_mod.queries().items(),
-        key=lambda kv: int(kv[0].split("_", 1)[0].lstrip("q")),
-    ))
+    # GATES is in gate-number order, independent of the driver-window
+    # rotation in queries() — keeps bench timings comparable across rounds.
+    gates = entry_mod.GATES
 
     # JVM/codegen warmup on the smallest query so q01 isn't charged for boot.
-    force(queries["q01_scan_projection"](spark, sf_dir))
+    force(gates["q01_scan_projection"].fn(spark, sf_dir))
 
     # min of N runs, each run a FRESH fn(spark, sf_dir) build + execute.
     # Rebuilding per run is the honest protocol (r8 verdict): re-executing
@@ -176,11 +78,11 @@ def main() -> None:
     # host's minute-scale I/O bursts, never data-path work.
     runs = int(os.environ.get("SPARK_GRAFT_BENCH_RUNS", "2"))
     timings: dict[str, float] = {}
-    for name, fn in queries.items():
+    for name, gate in gates.items():
         best = float("inf")
         for _ in range(runs):
             t0 = time.time()
-            force(fn(spark, sf_dir), name)
+            force(gate.fn(spark, sf_dir), name)
             best = min(best, time.time() - t0)
         timings[name] = round(best, 3)
 
@@ -193,7 +95,7 @@ def main() -> None:
     retry = [n for n, t in timings.items() if t > 1.0]
     for name in retry:
         t0 = time.time()
-        force(queries[name](spark, sf_dir), name)
+        force(gates[name].fn(spark, sf_dir), name)
         timings[name] = round(min(timings[name], time.time() - t0), 3)
 
     total = round(sum(timings.values()), 3)
@@ -208,11 +110,11 @@ def main() -> None:
         if key in short or sum(n.startswith(key + "_") for n in timings) > 1:
             key = key + "_" + name.split("_")[1][0]
         short[key] = sec
-    # Read/write split: WRITE_GATES (defined with the queries — engine
-    # write paths, streaming ingest, commit-replay maintenance) have
-    # in-memory-replay oracles, so ratio-vs-oracle is only meaningful
-    # over the read-query subset. Emit both totals.
-    wg = getattr(entry_mod, "WRITE_GATES", frozenset())
+    # Read/write split: write gates (engine write paths, streaming
+    # ingest, commit-replay maintenance) have in-memory-replay oracles,
+    # so ratio-vs-oracle is only meaningful over the read-query subset.
+    # Emit both totals.
+    wg = entry_mod.WRITE_GATES
     write_total = round(sum(t for n, t in timings.items() if n in wg), 3)
     read_total = round(total - write_total, 3)
     # One-time session-artifact build cost (token/graph/codebook index

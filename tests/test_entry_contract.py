@@ -73,16 +73,6 @@ def test_driver_window_rotation():
         assert window == never[:50]
 
 
-def test_write_gates_are_real_queries():
-    """WRITE_GATES (the bench read/write split) must stay a subset of
-    queries() — a renamed gate left behind in the set would silently
-    shift its time into the read-only total."""
-    import __spark_entry__ as entry_mod
-
-    unknown = sorted(entry_mod.WRITE_GATES - set(QUERIES))
-    assert not unknown, f"WRITE_GATES entries not in queries(): {unknown}"
-
-
 def test_no_duplicate_module_level_names():
     """Module-level fixture caches must be singly defined: a second
     `_NAME = {}` rebinds the first, silently fusing two gates' caches

@@ -35,17 +35,13 @@ def main() -> int:
     filters = sys.argv[2:]
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     spark = get_spark("capture_plans")
-    queries = dict(sorted(
-        entry_mod.queries().items(),
-        key=lambda kv: int(kv[0].split("_", 1)[0].lstrip("q")),
-    ))
     failed = []
-    for name, fn in queries.items():
+    for name, gate in entry_mod.GATES.items():
         if filters and not any(f in name for f in filters):
             continue
         t0 = time.time()
         try:
-            df = fn(spark, sf_dir)
+            df = gate.fn(spark, sf_dir)
             plan = formatted_plan(spark, df)
         except Exception as exc:  # record, keep going — this doubles as
             failed.append(name)   # a does-every-query-build smoke test

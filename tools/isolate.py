@@ -19,7 +19,7 @@ import time
 
 import __spark_entry__ as entry_mod
 from aws_dms_to_hudi_spark.session import get_spark
-from bench import SMALL_OUTPUT, force
+from bench import force
 
 
 def main() -> None:
@@ -27,20 +27,16 @@ def main() -> None:
     pats = sys.argv[1:]
     runs = int(os.environ.get("SPARK_GRAFT_BENCH_RUNS", "3"))
     spark = get_spark("isolate")
-    queries = dict(sorted(
-        entry_mod.queries().items(),
-        key=lambda kv: int(kv[0].split("_", 1)[0].lstrip("q")),
-    ))
-    wg = getattr(entry_mod, "WRITE_GATES", frozenset())
-    force(queries["q01_scan_projection"](spark, sf_dir))
-    for name, fn in queries.items():
+    gates = entry_mod.GATES
+    force(gates["q01_scan_projection"].fn(spark, sf_dir))
+    for name, gate in gates.items():
         if pats and not any(name.startswith(p) or p in name for p in pats):
             continue
         spark.sparkContext.setJobDescription(name)
         ts = []
         for _ in range(runs):
             t0 = time.time()
-            df = fn(spark, sf_dir)
+            df = gate.fn(spark, sf_dir)
             t_build = time.time() - t0
             force(df, name)
             ts.append((t_build, time.time() - t0))
