@@ -51,14 +51,19 @@ class Catalog:
         partition_path: str | None,
         schema_json: str,
     ) -> None:
-        """Register/refresh one table (idempotent, like Hive sync)."""
+        """Register/refresh one table (idempotent, like Hive sync). An
+        unchanged entry writes nothing: replacing an existing file costs
+        tens of ms on ext4, paid every sync round for nothing."""
         entries = self._load()
-        entries[table_name] = {
+        entry = {
             "path": str(table_path),
-            "record_key": record_key,
+            "record_key": list(record_key),
             "partition_path": partition_path,
             "schema": json.loads(schema_json),
         }
+        if entries.get(table_name) == entry:
+            return
+        entries[table_name] = entry
         self._save(entries)
 
     def tables(self) -> dict[str, dict[str, Any]]:

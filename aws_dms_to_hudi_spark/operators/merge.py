@@ -81,31 +81,43 @@ def upsert_merge(
     The incoming-flag tie-break makes re-applying an already-merged batch
     idempotent (incoming copy wins the tie; payload is identical).
     """
+    return _pick_winners(_union_tagged(existing, batch), key_cols,
+                         ordering_col, drop_deleted)
+
+
+def _union_tagged(existing: DataFrame | None, batch: DataFrame) -> DataFrame:
+    """``existing ∪ batch`` with the incoming-flag column, the half of
+    :func:`upsert_merge` before its shuffle — so a caller can place its
+    own exchange (e.g. the layout's range exchange) under the window."""
     batch = batch.withColumn(_SRC_COL, F.lit(1))
-    if existing is not None:
-        # Align incoming columns to the existing schema; CDC batches carry
-        # the envelope, stored state may have dropped transient columns.
-        existing = existing.withColumn(_SRC_COL, F.lit(0))
-        if DELETED_COL not in existing.columns and DELETED_COL in batch.columns:
-            existing = existing.withColumn(DELETED_COL, F.lit(False))
-        if existing.schema != batch.schema:
-            # Schema evolution (Hudi deltastreamer reconciliation): new
-            # columns append (stored rows read NULL), dropped columns
-            # NULL-fill, Avro promotions widen the stored type. Pure
-            # driver-side arithmetic + codegen-folded casts; raises on
-            # an incompatible change instead of coercing.
-            from aws_dms_to_hudi_spark.operators.schema_evolution import (
-                align_to,
-                evolved_schema,
-            )
+    if existing is None:
+        return batch
+    # Align incoming columns to the existing schema; CDC batches carry
+    # the envelope, stored state may have dropped transient columns.
+    existing = existing.withColumn(_SRC_COL, F.lit(0))
+    if DELETED_COL not in existing.columns and DELETED_COL in batch.columns:
+        existing = existing.withColumn(DELETED_COL, F.lit(False))
+    if dict(existing.dtypes) != dict(batch.dtypes):
+        # Schema evolution (Hudi deltastreamer reconciliation): new
+        # columns append (stored rows read NULL), dropped columns
+        # NULL-fill, Avro promotions widen the stored type; raises on an
+        # incompatible change instead of coercing. Column order and
+        # nullability alone need none of it: unionByName handles both.
+        from aws_dms_to_hudi_spark.operators.schema_evolution import (
+            align_to,
+            evolved_schema,
+        )
 
-            target = evolved_schema(existing.schema, batch.schema)
-            existing = align_to(existing, target)
-            batch = align_to(batch, target)
-        unioned = existing.unionByName(batch, allowMissingColumns=True)
-    else:
-        unioned = batch
+        target = evolved_schema(existing.schema, batch.schema)
+        existing = align_to(existing, target)
+        batch = align_to(batch, target)
+    return existing.unionByName(batch, allowMissingColumns=True)
 
+
+def _pick_winners(unioned: DataFrame, key_cols: list[str], ordering_col: str,
+                  drop_deleted: bool = True) -> DataFrame:
+    """The other half: one row per key (max ordering value, incoming
+    wins ties), then tombstones drop."""
     w = Window.partitionBy(*key_cols).orderBy(
         F.col(ordering_col).desc(), F.col(_SRC_COL).desc()
     )

@@ -30,6 +30,7 @@ from pyspark.sql.types import (
     FloatType,
     IntegerType,
     LongType,
+    NullType,
     ShortType,
     StructField,
     StructType,
@@ -78,13 +79,17 @@ def widen_type(a: DataType, b: DataType) -> DataType:
     Supported promotions: the numeric chain byte→short→int→long→float→
     double; decimal(p₁,s₁) ∪ decimal(p₂,s₂) → decimal with the combined
     integer/fraction digits (capped at 38); integral → decimal when the
-    decimal's integer digits can hold it; date → timestamp. Everything
+    decimal's integer digits can hold it; date → timestamp; NULL
+    (``void``: an all-NULL column, e.g. a version dir whose only
+    partition is the default one) → anything. Everything
     else (string↔numeric, nested-type changes, boolean↔anything) is an
     incompatible evolution and raises — silently coercing those is how
     a lake gets corrupted.
     """
-    if a == b:
+    if a == b or isinstance(b, NullType):
         return a
+    if isinstance(a, NullType):
+        return b
     pa, pb = _chain_pos(a), _chain_pos(b)
     if pa is not None and pb is not None:
         return _NUMERIC_CHAIN[max(pa, pb)]()

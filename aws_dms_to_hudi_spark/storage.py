@@ -29,12 +29,16 @@ operators.merge) converges to the same state.
 
 Scale design:
 
-- **COW partitioned upsert rewrites only touched partitions.** The batch's
-  distinct partition values are collected (a few values, not data), the
-  current state is pruned to those partitions before the merge shuffle, and
-  unchanged partitions are carried forward by manifest reference — zero
-  data movement. This mirrors Hudi's partition-scoped (non-global) index:
-  a record key is resolved within its partition path.
+- **COW partitioned upsert rewrites only touched partitions.** The
+  touched partitions are observed during the changelog write (an
+  ``Observation`` of the partition values — no extra job), the current
+  state is pruned to those partitions before the merge, and unchanged
+  partitions are carried forward by manifest reference — zero data
+  movement. The merge key is (partition value, record key), as in Hudi's
+  partition-scoped (non-global) index: a record key is resolved within
+  its partition path, so a key updated into another partition leaves its
+  old row in place. The layout's range exchange on those columns serves
+  the merge window too: one exchange, one sort per sync round.
 - **MOR** (``hoodie.compact.inline`` for MERGE_ON_READ tables,
   ``handler.py:112-113``): writes append a precombined delta dir (cheap,
   no table-size-dependent work) and reads merge base ∪ deltas on the fly;
@@ -54,12 +58,17 @@ from dataclasses import dataclass, field
 from pathlib import Path
 from typing import Any
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
 
 from aws_dms_to_hudi_spark.config import MERGE_ON_READ, TableConfig
-from aws_dms_to_hudi_spark.operators.merge import precombine, upsert_merge
+from aws_dms_to_hudi_spark.operators.merge import (
+    _pick_winners,
+    _union_tagged,
+    precombine,
+    upsert_merge,
+)
 from aws_dms_to_hudi_spark.operators.schema_evolution import reconcile
 
 COMMITS_DIR = "_commits"
@@ -110,6 +119,13 @@ class Commit:
     # partitioned write of zero rows makes no partition dir, so no file
     # footer describes the table. None whenever ``data`` is non-empty.
     schema: str | None = None
+
+    def dirs(self) -> list[str]:
+        """Every dir this commit references: data, MOR deltas,
+        changelog, deletion vectors and the CDC before-image."""
+        extra = [self.cdc_dir] if self.cdc_dir else []
+        return [*self.data.values(), *self.deltas, *self.changelog,
+                *self.dv, *extra]
 
     def to_json(self) -> str:
         return json.dumps(
@@ -166,6 +182,7 @@ BLOOM_BITS = 1 << 17  # bits per dir filter (16 KiB bitmap)
 BLOOM_K = 5  # hash functions; fpp ~ (1 - e^(-kn/m))^k
 
 LINEAGE_COL = "_commit_version"  # Iceberg v3 row-lineage analog
+NULL_PARTITION = "__HIVE_DEFAULT_PARTITION__"  # Spark's dir for NULL / ''
 
 
 class ConcurrentWriteConflict(RuntimeError):
@@ -315,24 +332,26 @@ class CuratedTable:
         return None
 
     def _bucketize(self, df: DataFrame) -> DataFrame:
-        """Attach the deterministic bucket id: pmod(xxhash64(keys), N).
-        A key's bucket never changes, so existing rows (bucket read back
-        from the dir name) and incoming rows (computed here) agree."""
+        """Attach the synthetic layout column (bucket or key-range id)
+        when the table has one and ``df`` lacks it."""
+        pcol = self._pcol
+        if pcol in (BUCKET_COL, RANGE_COL) and pcol not in df.columns:
+            return df.withColumn(pcol, self._layout_expr(df))
+        return df
+
+    def _layout_expr(self, df: DataFrame):
+        """Each row's layout value: the layout column when ``df`` has it,
+        else the key-range group or the bucket id pmod(xxhash64(keys), N)
+        — functions of the key, so existing rows (id read back from the
+        dir name) and incoming rows (computed here) agree."""
         cfg = self.config
+        if cfg.is_partitioned or self._pcol in df.columns:
+            return F.col(self._pcol)
         if cfg.key_range_groups:
-            if RANGE_COL in df.columns:
-                return df
-            return df.withColumn(
-                RANGE_COL, self._range_group_expr(self._key_bounds(df))
-            )
-        if not cfg.num_buckets or BUCKET_COL in df.columns:
-            return df
-        return df.withColumn(
-            BUCKET_COL,
-            F.pmod(F.xxhash64(*cfg.record_key), F.lit(cfg.num_buckets)).cast(
-                "int"
-            ),
-        )
+            return self._range_group_expr(self._key_bounds(df))
+        return F.pmod(
+            F.xxhash64(*cfg.record_key), F.lit(cfg.num_buckets)
+        ).cast("int")
 
     def _key_bounds(self, df: DataFrame) -> list:
         """Range-group cut points: from the manifest once frozen, else
@@ -528,18 +547,15 @@ class CuratedTable:
         commit = self._commit_at(version)
         if commit is None:
             return None
-        rel_dirs = list(commit.data.values())
-        if filters and rel_dirs and (read_optimized or not commit.deltas):
+        if filters and commit.data and (read_optimized or not commit.deltas):
             rel_dirs = self._prune_stats_dirs(commit, filters)
-            if not rel_dirs:  # every dir proven empty: typed empty result
-                full = self._read_dirs(list(commit.data.values()))
-                base = self.spark.createDataFrame([], full.schema)
-                rel_dirs = None
-        if rel_dirs is not None:
-            base = self._read_dirs(rel_dirs)
-        if base is None and commit.schema:  # a zero-row partitioned write
-            base = self.spark.createDataFrame(
-                [], StructType.fromJson(json.loads(commit.schema)))
+            base = (
+                self._read_dirs(rel_dirs) if rel_dirs
+                # every dir proven empty: typed empty result
+                else self._typed_empty(commit)
+            )
+        else:
+            base = self._snapshot(commit)
         if commit.deltas and not read_optimized:
             deltas = self._read_dirs(commit.deltas)
             base = upsert_merge(
@@ -646,6 +662,19 @@ class CuratedTable:
                 )
         return df
 
+    def _snapshot(self, commit: Commit) -> DataFrame | None:
+        """Rows of every data dir ``commit`` maps, or, when it maps none,
+        a typed empty frame from ``Commit.schema``."""
+        if not commit.data and commit.schema:
+            return self.spark.createDataFrame(
+                [], StructType.fromJson(json.loads(commit.schema)))
+        return self._read_dirs(list(commit.data.values()))
+
+    def _typed_empty(self, commit: Commit) -> DataFrame | None:
+        snap = self._snapshot(commit)
+        return None if snap is None else self.spark.createDataFrame(
+            [], snap.schema)
+
     def _prune_stats_dirs(
         self, commit: Commit, filters: list[tuple[str, str, Any]]
     ) -> list[str]:
@@ -677,14 +706,10 @@ class CuratedTable:
         than ``cleaner.commits.retained`` require a full refresh, exactly
         as in Hudi.
         """
-        dirs: list[str] = []
-        for c in self.commits():
-            if begin_version is not None and c.version <= begin_version:
-                continue
-            if end_version is not None and c.version > end_version:
-                continue
-            dirs.extend(c.changelog)
-        df = self._read_dirs(dirs)
+        df = self._read_dirs([
+            d for c in self._data_commits(begin_version, end_version)
+            for d in c.changelog
+        ])
         if df is None:
             return None
         df = precombine(
@@ -697,6 +722,14 @@ class CuratedTable:
         if BUCKET_COL in df.columns or RANGE_COL in df.columns:
             df = df.drop(BUCKET_COL, RANGE_COL)
         return df
+
+    def _data_commits(self, begin: int | None,
+                      end: int | None) -> list[Commit]:
+        """Commits in ``(begin, end]`` that changed rows (table services
+        carry no changelog)."""
+        return [c for c in self.commits() if c.changelog
+                and (begin is None or c.version > begin)
+                and (end is None or c.version <= end)]
 
     def _commit_at(self, version: int | None) -> Commit | None:
         commits = self.commits()
@@ -767,15 +800,21 @@ class CuratedTable:
 
     def _partition_sorted(self, df: DataFrame, pcol: str,
                           sort_cols: list[str]) -> DataFrame:
-        """PARTITION_SORT layout with write parallelism decoupled from
+        """PARTITION_SORT layout: :meth:`_range_exchange` on (pcol, sort
+        keys), then sorted within each task."""
+        cols = [pcol, *sort_cols]
+        return self._range_exchange(df, cols).sortWithinPartitions(*cols)
+
+    def _range_exchange(self, df: DataFrame, cols: list[str]) -> DataFrame:
+        """PARTITION_SORT exchange with write parallelism decoupled from
         the partition-value count. ``repartition(pcol)`` alone caps the
         write at one task per distinct partition value — a 3-partition
         table writes 100 TB with 3 tasks. Range-repartitioning on
         (pcol, sort keys) keeps every output file inside one partition
-        AND internally sorted (each task holds a contiguous slice of
-        the global (pcol, key) order); as a bonus the per-file key
-        ranges are disjoint, which is exactly what column-stats /
-        key-range pruning wants.
+        (each task holds a contiguous slice of the global (pcol, key)
+        order, so a per-task sort orders the file); as a bonus the
+        per-file key ranges are disjoint, which is exactly what
+        column-stats / key-range pruning wants.
 
         Width is SIZE-ADAPTIVE, not a cluster constant (guide §2.2/§6):
         ``clamp(ceil(est_bytes / advisory), 1, defaultParallelism)``.
@@ -805,8 +844,7 @@ class CuratedTable:
             n = max(1, min(n_max, -(-est // max(adv_b, 1))))
         except Exception:
             n = n_max
-        cols = [F.col(pcol)] + [F.col(c) for c in sort_cols]
-        return df.repartitionByRange(n, *cols).sortWithinPartitions(*cols)
+        return df.repartitionByRange(n, *cols)
 
     def bootstrap(
         self, source_dir: str, checkpoint: dict[str, Any] | None = None
@@ -1084,16 +1122,13 @@ class CuratedTable:
             key_bounds=newt._commit_key_bounds(),
             col_stats=newt._assemble_stats(None, data, vdir),
             dv=[],  # materialized by the rewrite, like clustering
+            schema=None if data else df.schema.json(),
         )
         newt._write_commit(commit)
         if cfg.record_index:
             # dir keys carry the spec: rebuild or point_lookup would
             # resolve zero candidate dirs and silently miss live keys
-            rli_dir = self.root / RLI_DIR
-            if rli_dir.exists():
-                shutil.rmtree(rli_dir)
-            newt._rli_table = None
-            newt._update_record_index(newt._bucketize(df))
+            newt._rebuild_record_index(df)
         if cfg.secondary_index:
             newt.rebuild_secondary_index()
         return newt
@@ -1158,6 +1193,7 @@ class CuratedTable:
                 {_abs(d): dict(s) for d, s in src.col_stats.items()}
                 if src.col_stats else None
             ),
+            schema=src.schema,
         )
         clone._write_commit(commit)
         return clone
@@ -1297,7 +1333,8 @@ class CuratedTable:
         """Merge one CDC batch (D4+D5+D6) into a new table version.
 
         COW: partition-pruned rewrite (only partitions present in the batch
-        shuffle/rewrite; the rest carry forward by reference).
+        shuffle/rewrite, merged on (partition value, record key); the rest
+        carry forward by reference).
         MOR: append a precombined delta dir; merge happens at read/compact.
         """
         cfg = self.config
@@ -1311,61 +1348,21 @@ class CuratedTable:
             return self._append_delta(batch, version, prev, checkpoint)
 
         vdir = f"v{version:08d}"
-        # Materialize the precombined change set first (Hudi CDC analog):
-        # it feeds incremental reads, and reading it back for the merge
-        # truncates the batch's lineage so the merge plan stays small.
         cldir = f"{vdir}_changelog"
-        batch = self._stamp_lineage(batch, version)
-        precombine(batch, cfg.record_key, cfg.source_ordering_field).write.mode(
-            "overwrite"
-        ).parquet(str(self.root / cldir))
-        batch = self.spark.read.parquet(str(self.root / cldir))
-        pcol = self._pcol
-        if pcol is not None:
-            # Prune both sides to the touched partitions/buckets: collect
-            # the batch's distinct partition values (small driver-side list
-            # of VALUES, not rows) and rewrite only those dirs — the rest
-            # carry forward by reference in the new commit manifest.
-            batch = self._bucketize(batch)
-            touched = [
-                r[0]
-                for r in batch.select(pcol).distinct().collect()
-            ]
-            prev_dirs = dict(prev.data)
-            touched_rels = [
-                prev_dirs[k]
-                for k in (_pdir(pcol, v) for v in touched)
-                if k in prev_dirs
-            ]
-            existing = self._read_dirs(touched_rels) if touched_rels else None
-            existing = self._apply_dv(prev, existing)  # deleted rows must
-            # not re-merge back from the old dir (DV tables only)
-            cdcdir = None
-            if cfg.cdc_images:
-                cdcdir = f"{vdir}_cdcbefore"
-                self._write_cdc_before(existing, batch, cdcdir)
-            merged = upsert_merge(
-                existing, batch, cfg.record_key, cfg.source_ordering_field
+        batch, touched = self._write_changelog(
+            self._stamp_lineage(batch, version), cldir
+        )
+        cdcdir = f"{vdir}_cdcbefore" if cfg.cdc_images else None
+        if touched is not None:
+            fresh, merged = self._merge_touched(
+                prev, batch, touched, vdir, cdcdir
             )
-            (
-                self._partition_sorted(merged, pcol, list(cfg.record_key))
-                .write.mode("overwrite")
-                .partitionBy(pcol)
-                .parquet(str(self.root / vdir))
-            )
-            new_data = dict(prev_dirs)
-            # Drop carried-forward entries for touched partitions (a
-            # partition whose every key was deleted must disappear).
-            for v in touched:
-                new_data.pop(_pdir(pcol, v), None)
-            new_data.update(self._scan_partition_dirs(vdir))
+            new_data = _overlay(prev.data, touched, fresh)
         else:
             existing = self._apply_dv(
                 prev, self._read_dirs(list(prev.data.values()))
             )
-            cdcdir = None
-            if cfg.cdc_images:
-                cdcdir = f"{vdir}_cdcbefore"
+            if cdcdir:
                 self._write_cdc_before(existing, batch, cdcdir)
             merged = upsert_merge(
                 existing, batch, cfg.record_key, cfg.source_ordering_field
@@ -1393,6 +1390,67 @@ class CuratedTable:
         self._write_commit(commit)
         return commit
 
+    def _write_changelog(
+        self, batch: DataFrame, cldir: str
+    ) -> tuple[DataFrame, list[str] | None]:
+        """Write the precombined change set (Hudi CDC analog; it feeds
+        incremental reads) and read it back with the schema just written,
+        which keeps the merge plan small. Also returns the partition keys
+        the write observed (None when unpartitioned)."""
+        cfg = self.config
+        pcol = self._pcol
+        out = precombine(batch, cfg.record_key, cfg.source_ordering_field)
+        if pcol is not None:
+            # collect_set drops NULLs, hence the flag. Keep the observed
+            # node in the write's final stage: AQE drops one inside a stage
+            # it replaces by an empty relation, and no metrics arrive.
+            obs = Observation()
+            v = self._layout_expr(out)
+            out = out.observe(obs, F.collect_set(v).alias("values"),
+                              F.bool_or(v.isNull()).alias("has_null"))
+        out.write.mode("overwrite").parquet(str(self.root / cldir))
+        back = self.spark.read.schema(out.schema).parquet(
+            str(self.root / cldir)
+        )
+        if pcol is None:
+            return back, None
+        m = obs.get
+        values = [*m["values"], *([None] if m["has_null"] else [])]
+        return self._bucketize(back), [_pdir(pcol, v) for v in values]
+
+    def _merge_touched(
+        self,
+        prev: Commit,
+        batch: DataFrame,
+        touched: list[str],
+        vdir: str,
+        cdcdir: str | None = None,
+    ) -> tuple[dict[str, str], DataFrame]:
+        """Merge ``batch`` into the ``touched`` partitions' rows, write them
+        under ``vdir``; returns (partition dirs written, merged frame).
+        The merge key is (layout value, record key) — Hudi's non-global
+        index — so the layout's range exchange also serves the winner
+        window: one exchange, and one sort that orders the files too."""
+        cfg = self.config
+        pcol = self._pcol
+        mkey = [pcol, *cfg.record_key]
+        existing = self._read_dirs(
+            [prev.data[k] for k in touched if k in prev.data]
+        )
+        # deleted rows must not re-merge back from the old dir
+        existing = self._apply_dv(prev, existing)
+        if cdcdir:
+            self._write_cdc_before(existing, batch, cdcdir, mkey)
+        merged = _pick_winners(
+            self._range_exchange(_union_tagged(existing, batch), mkey),
+            mkey,
+            cfg.source_ordering_field,
+        )
+        merged.sortWithinPartitions(*mkey).write.mode(
+            "overwrite"
+        ).partitionBy(pcol).parquet(str(self.root / vdir))
+        return self._scan_partition_dirs(vdir), merged
+
     # ---------- deletion vectors (Delta Lake DV analog) ----------
 
     def _dv_key_cond(self, rows, dvd):
@@ -1408,10 +1466,13 @@ class CuratedTable:
         )
 
     def _dir_key_expr(self):
+        """Each row's data-map key, ``_pdir`` as a column expression."""
         pcol = self._pcol
         if pcol is None:
             return F.lit("")
-        return F.concat(F.lit(f"{pcol}="), F.col(pcol).cast("string"))
+        v = F.nullif(F.col(pcol).cast("string"), F.lit(""))
+        return F.concat(F.lit(f"{pcol}="),
+                        F.coalesce(v, F.lit(NULL_PARTITION)))
 
     def _apply_dv(self, commit: Commit, df: DataFrame | None):
         """Anti-join a snapshot against the commit's active deletion
@@ -1465,8 +1526,7 @@ class CuratedTable:
         version = self._next_version()
         dvdir = f"v{version:08d}_dv"
         kcols = list(cfg.record_key)
-        snap = self._read_dirs(list(prev.data.values()))
-        snap = self._apply_dv(prev, snap)  # already-deleted keys: no dup
+        snap = self._apply_dv(prev, self._snapshot(prev))  # no dup deletes
         doomed = (
             snap.join(
                 F.broadcast(keys.select(*kcols).distinct()), kcols, "left_semi"
@@ -1488,6 +1548,7 @@ class CuratedTable:
             key_bounds=self._commit_key_bounds(),
             col_stats=prev.col_stats,
             dv=[*prev.dv, dvdir],
+            schema=prev.schema,
         )
         self._write_commit(commit)
         return commit
@@ -1574,11 +1635,9 @@ class CuratedTable:
                 str(self.root / vdir)
             )
             fresh = self._scan_partition_dirs(vdir)
-            new_data = dict(prev.data)
-            for v in touched:
-                new_data.pop(_pdir(pcol, v), None)
-            # replaced partitions take the new dirs; carried ones stay
-            new_data.update(fresh)
+            new_data = _overlay(
+                prev.data, [_pdir(pcol, v) for v in touched], fresh
+            )
         else:
             batch = apply_deletes(batch)
             batch.sortWithinPartitions(*cfg.record_key).write.mode(
@@ -1664,6 +1723,7 @@ class CuratedTable:
             # base dirs unchanged; deltas carry no stats (pruning is
             # disabled while deltas are outstanding anyway)
             col_stats=prev.col_stats,
+            schema=prev.schema,
         )
         self._write_commit(commit)
         return commit
@@ -1705,6 +1765,7 @@ class CuratedTable:
             parent=prev.version,
             key_bounds=self._commit_key_bounds(),
             col_stats=self._assemble_stats(prev, data, vdir),
+            schema=None if data else merged.schema.json(),
         )
         self._write_commit(commit)
         return commit
@@ -1719,21 +1780,12 @@ class CuratedTable:
         if len(commits) <= retained_commits:
             return []
         live, old = commits[-retained_commits:], commits[:-retained_commits]
-        live_dirs: set[str] = set()
-        for c in live:
-            live_dirs.update(_version_of(d) for d in c.data.values())
-            live_dirs.update(_version_of(d) for d in c.deltas)
-            live_dirs.update(_version_of(d) for d in c.changelog)
-            if c.cdc_dir:
-                live_dirs.add(_version_of(c.cdc_dir))
-            live_dirs.update(_version_of(d) for d in c.dv)
+        live_dirs = {_version_of(d) for c in live for d in c.dirs()}
         removed = []
         for c in old:
             # cdc before-image dirs age out with their commits too —
             # otherwise *_cdcbefore dirs grow without bound
-            extra = [c.cdc_dir] if c.cdc_dir else []
-            for d in [*c.data.values(), *c.deltas, *c.changelog,
-                      *c.dv, *extra]:
+            for d in c.dirs():
                 if _is_external(d):
                     # bootstrap source dirs: referenced, never owned —
                     # deleting one would destroy the user's source lake
@@ -1852,6 +1904,7 @@ class CuratedTable:
             parent=prev.version,
             key_bounds=self._commit_key_bounds(),
             col_stats=self._assemble_stats(prev, data, vdir),
+            schema=None if data else out.schema.json(),
         )
         self._write_commit(commit)
         return commit
@@ -1870,18 +1923,12 @@ class CuratedTable:
         dirs are indistinguishable from a crashed one's. The referenced
         set comes from the retained manifests plus the archive, so a
         cleaned-then-archived timeline never misclassifies."""
-        referenced: set[str] = set()
         commits = list(self.commits())
         apath = self.root / COMMITS_DIR / ARCHIVE_FILE
         if apath.exists():
             commits += [Commit.from_json(json.dumps(d))
                         for d in json.loads(apath.read_text())]
-        for c in commits:
-            for d in [*c.data.values(), *c.deltas, *c.changelog]:
-                referenced.add(_version_of(d))
-            if c.cdc_dir:
-                referenced.add(_version_of(c.cdc_dir))
-            referenced.update(_version_of(d) for d in c.dv)
+        referenced = {_version_of(d) for c in commits for d in c.dirs()}
         orphans = []
         for child in sorted(self.root.iterdir()):
             if not child.is_dir() or child.name.startswith("_"):
@@ -1929,16 +1976,11 @@ class CuratedTable:
             key_bounds=self._commit_key_bounds(),
             col_stats=target.col_stats,
             dv=list(target.dv),
+            schema=target.schema,
         )
         self._write_commit(commit)
         if self.config.record_index:
-            rli_dir = self.root / RLI_DIR
-            if rli_dir.exists():
-                shutil.rmtree(rli_dir)
-            self._rli_table = None
-            snap = self.read(version=commit.version)
-            if snap is not None:
-                self._update_record_index(self._bucketize(snap))
+            self._rebuild_record_index(self.read(version=commit.version))
         if self.config.secondary_index:
             # independent of the RLI rebuild: a rebuild_secondary_index
             # compaction may have dropped entries for pairs that the
@@ -2114,28 +2156,8 @@ class CuratedTable:
         token = uuid.uuid4().hex[:8]
         vtoken = f"v{prev.version + 1:08d}w{token}"
         cldir = f"{vtoken}_changelog"
-        precombine(
-            batch, cfg.record_key, cfg.source_ordering_field
-        ).write.mode("overwrite").parquet(str(self.root / cldir))
-        batch = self.spark.read.parquet(str(self.root / cldir))
-        batch = self._bucketize(batch)
-        touched = [
-            _pdir(pcol, r[0])
-            for r in batch.select(pcol).distinct().collect()
-        ]
-        prev_dirs = dict(prev.data)
-        touched_rels = [prev_dirs[k] for k in touched if k in prev_dirs]
-        existing = self._read_dirs(touched_rels) if touched_rels else None
-        merged = upsert_merge(
-            existing, batch, cfg.record_key, cfg.source_ordering_field
-        )
-        (
-            self._partition_sorted(merged, pcol, list(cfg.record_key))
-            .write.mode("overwrite")
-            .partitionBy(pcol)
-            .parquet(str(self.root / vtoken))
-        )
-        fresh = self._scan_partition_dirs(vtoken)
+        batch, touched = self._write_changelog(batch, cldir)
+        fresh, _ = self._merge_touched(prev, batch, touched, vtoken)
         stats = (
             self._stats_for_vdir(vtoken) if cfg.stats_columns else None
         )
@@ -2178,10 +2200,7 @@ class CuratedTable:
                         f"{staged.parent_version + 1}..{latest.version} "
                         "after this writer's snapshot; re-prepare"
                     )
-            new_data = dict(latest.data)
-            for k in staged.touched:
-                new_data.pop(k, None)
-            new_data.update(staged.fresh)
+            new_data = _overlay(latest.data, staged.touched, staged.fresh)
             col_stats = None
             if self.config.stats_columns:
                 col_stats = dict(staged.col_stats or {})
@@ -2198,6 +2217,8 @@ class CuratedTable:
                 changelog=list(staged.changelog),
                 key_bounds=self._commit_key_bounds(),
                 col_stats=col_stats,
+                schema=None if new_data
+                else self._snapshot(latest).schema.json(),
             )
             self._write_commit(commit, _locked=True)
             return commit
@@ -2212,10 +2233,7 @@ class CuratedTable:
         or :meth:`abort_staged` discards it without a trace. Cost: the
         same dir-union read any snapshot costs."""
         parent = self._commit_at(staged.parent_version)
-        new_data = dict(parent.data)
-        for k in staged.touched:
-            new_data.pop(k, None)
-        new_data.update(staged.fresh)
+        new_data = _overlay(parent.data, staged.touched, staged.fresh)
         df = self._read_dirs(list(new_data.values()))
         if df is not None and (
             self.config.num_buckets or self.config.key_range_groups
@@ -2274,6 +2292,13 @@ class CuratedTable:
             F.xxhash64(*self.config.record_key), F.lit(RLI_BUCKETS)
         ).cast("int")
 
+    def _rebuild_record_index(self, snap: DataFrame | None) -> None:
+        if (self.root / RLI_DIR).exists():
+            shutil.rmtree(self.root / RLI_DIR)
+        self._rli_table = None
+        if snap is not None:
+            self._update_record_index(self._bucketize(snap))
+
     def _update_record_index(self, batch: DataFrame) -> None:
         """Upsert the batch's (key -> dir key) entries; tombstones delete
         their index entry. ``batch`` is precombined and (when the table
@@ -2286,12 +2311,6 @@ class CuratedTable:
         if rli is None:
             return
         cfg = self.config
-        pcol = self._pcol
-        dir_key = (
-            F.concat(F.lit(f"{pcol}="), F.col(pcol).cast("string"))
-            if pcol is not None
-            else F.lit("")
-        )
         deleted = (
             F.coalesce(F.col(DELETED_COL), F.lit(False))
             if DELETED_COL in batch.columns
@@ -2300,7 +2319,7 @@ class CuratedTable:
         entries = batch.select(
             *cfg.record_key,
             F.col(cfg.source_ordering_field),
-            dir_key.alias(DIR_KEY_COL),
+            self._dir_key_expr().alias(DIR_KEY_COL),
             deleted.alias(DELETED_COL),
             # bucket by BASE keys so lookups can route without dir keys
             # (_bucketize is a no-op when the column is already present)
@@ -2322,22 +2341,28 @@ class CuratedTable:
             raise ValueError(
                 f"{self.config.name}: record_index not enabled"
             )
+        kcols = list(self.config.record_key)
+        return self._lookup_via_index(
+            rli, keys.select(*kcols).distinct(), kcols,
+            self._rli_bucket_expr(),
+        )
+
+    def _lookup_via_index(
+        self, index: "CuratedTable", probe: DataFrame, on: list[str],
+        bucket_expr,
+    ) -> DataFrame | None:
+        """Index lookup: route the probe to index buckets (a collect of at
+        most the bucket count), collect the candidate dir keys (at most
+        the partition count), then :meth:`_scan_probe` those dirs."""
         commit = self.latest_commit()
         if commit is None:
             return None
-        kcols = list(self.config.record_key)
-        probe = keys.select(*kcols).distinct()
-        icommit = rli.latest_commit()
+        icommit = index.latest_commit()
         rows_dirs: list[str] = []
         if icommit is not None:
-            # route to index buckets by the base-key hash (<= RLI_BUCKETS
-            # values — bounded collect, same class as touched-partition
-            # collection in upsert)
             pb = sorted(
-                r[0]
-                for r in probe.select(
-                    self._rli_bucket_expr().alias("b")
-                ).distinct().collect()
+                r[0] for r in probe.select(bucket_expr.alias("b"))
+                .distinct().collect()
             )
             idirs = [
                 icommit.data[k]
@@ -2345,32 +2370,36 @@ class CuratedTable:
                 if k in icommit.data
             ]
             if idirs:
-                idx = rli._read_dirs(idirs)
-                hits = idx.join(F.broadcast(probe), on=kcols, how="left_semi")
+                hits = index._read_dirs(idirs).join(
+                    F.broadcast(probe), on=on, how="left_semi")
                 dkeys = sorted(
                     r[0] for r in hits.select(DIR_KEY_COL).distinct().collect()
                 )
                 rows_dirs = [
                     commit.data[k] for k in dkeys if k in commit.data
                 ]
+        return self._scan_probe(commit, rows_dirs, probe, on)
+
+    def _scan_probe(
+        self, commit: Commit, rows_dirs: list[str], probe: DataFrame,
+        on: list[str],
+    ) -> DataFrame:
+        """Rows of ``rows_dirs`` and of every MOR delta (a delta may carry
+        any key) semi-joined to ``probe``, which clears index false
+        positives; hidden columns drop, as in read()."""
         base = self._read_dirs(rows_dirs) if rows_dirs else None
         if commit.deltas:
-            deltas = self._read_dirs(commit.deltas)
             base = upsert_merge(
                 base,
-                deltas,
+                self._read_dirs(commit.deltas),
                 self.config.record_key,
                 self.config.source_ordering_field,
             )
         if base is None:
-            full = self._read_dirs(list(commit.data.values()))
-            return self.spark.createDataFrame([], full.schema).drop(
-                BUCKET_COL, RANGE_COL, LINEAGE_COL
-            )
-        out = base.join(F.broadcast(probe), on=kcols, how="left_semi")
-        # hidden metadata stays hidden: lookups mirror read()'s
-        # include_lineage=False default
-        return out.drop(BUCKET_COL, RANGE_COL, LINEAGE_COL)
+            base = self._typed_empty(commit)
+        return base.join(F.broadcast(probe), on=on, how="left_semi").drop(
+            BUCKET_COL, RANGE_COL, LINEAGE_COL
+        )
 
     # ---------- secondary index (Hudi 1.0 SECONDARY_INDEX analog) ----------
 
@@ -2425,12 +2454,6 @@ class CuratedTable:
         col = cfg.secondary_index
         if col not in batch.columns:
             return
-        pcol = self._pcol
-        dir_key = (
-            F.concat(F.lit(f"{pcol}="), F.col(pcol).cast("string"))
-            if pcol is not None
-            else F.lit("")
-        )
         b = batch
         if DELETED_COL in b.columns:
             b = b.filter(~F.coalesce(F.col(DELETED_COL), F.lit(False)))
@@ -2438,7 +2461,7 @@ class CuratedTable:
             F.col(col),
             *cfg.record_key,
             F.col(cfg.source_ordering_field),
-            dir_key.alias(DIR_KEY_COL),
+            self._dir_key_expr().alias(DIR_KEY_COL),
             self._sidx_bucket_expr().alias(BUCKET_COL),
         )
         sidx.upsert(entries)
@@ -2475,52 +2498,11 @@ class CuratedTable:
             raise ValueError(
                 f"{self.config.name}: secondary_index not enabled"
             )
-        commit = self.latest_commit()
-        if commit is None:
-            return None
         col = self.config.secondary_index
-        probe = values.select(col).distinct()
-        icommit = sidx.latest_commit()
-        rows_dirs: list[str] = []
-        if icommit is not None:
-            pb = sorted(
-                r[0]
-                for r in probe.select(
-                    self._sidx_bucket_expr().alias("b")
-                ).distinct().collect()
-            )
-            idirs = [
-                icommit.data[k]
-                for k in (f"{BUCKET_COL}={b}" for b in pb)
-                if k in icommit.data
-            ]
-            if idirs:
-                idx = sidx._read_dirs(idirs)
-                hits = idx.join(F.broadcast(probe), on=[col],
-                                how="left_semi")
-                dkeys = sorted(
-                    r[0]
-                    for r in hits.select(DIR_KEY_COL).distinct().collect()
-                )
-                rows_dirs = [
-                    commit.data[k] for k in dkeys if k in commit.data
-                ]
-        base = self._read_dirs(rows_dirs) if rows_dirs else None
-        if commit.deltas:
-            deltas = self._read_dirs(commit.deltas)
-            base = upsert_merge(
-                base,
-                deltas,
-                self.config.record_key,
-                self.config.source_ordering_field,
-            )
-        if base is None:
-            full = self._read_dirs(list(commit.data.values()))
-            return self.spark.createDataFrame([], full.schema).drop(
-                BUCKET_COL, RANGE_COL, LINEAGE_COL
-            )
-        out = base.join(F.broadcast(probe), on=[col], how="left_semi")
-        return out.drop(BUCKET_COL, RANGE_COL, LINEAGE_COL)
+        return self._lookup_via_index(
+            sidx, values.select(col).distinct(), [col],
+            self._sidx_bucket_expr(),
+        )
 
     # ---------- bloom key index (Hudi BLOOM / metadata bloom_filters) ----
 
@@ -2589,83 +2571,71 @@ class CuratedTable:
         read and merged (a delta may carry any key). A filter never
         under-approximates its dir, so the result equals a full-scan
         semi-join exactly."""
-        if not self.config.bloom_index:
-            raise ValueError(f"{self.config.name}: bloom_index not enabled")
-        commit = self.latest_commit()
+        commit = self._bloom_commit()
         if commit is None:
             return None
         kcols = list(self.config.record_key)
         probe = keys.select(*kcols).distinct()
-        # ensure filters exist even for dirs written before the flag
-        # flipped on (the async-indexer backfill path)
-        self._update_bloom_index(commit)
-        # one array row per probe key — grouping is explicit, not an
-        # artifact of explode/collect row order
-        key_pos = [r["pos"] for r in self._bloom_positions(probe)
-                   .collect()]
-        rows_dirs = []
-        for rel in commit.data.values():
-            path = self._bloom_path(rel)
-            if not path.exists():  # dir vanished under clean(): scan it
-                rows_dirs.append(rel)
-                continue
-            blob = json.loads(path.read_text())
-            words = {int(w): int(b) for w, b in blob["words"].items()}
-            hit = any(
-                all(words.get(p // 64, 0) >> (p % 64) & 1 for p in kp)
-                for kp in key_pos
-            )
-            if hit:
-                rows_dirs.append(rel)
-        base = self._read_dirs(rows_dirs) if rows_dirs else None
-        if commit.deltas:
-            deltas = self._read_dirs(commit.deltas)
-            base = upsert_merge(
-                base, deltas, kcols, self.config.source_ordering_field
-            )
-        if base is None:
-            full = self._read_dirs(list(commit.data.values()))
-            return self.spark.createDataFrame([], full.schema).drop(
-                BUCKET_COL, RANGE_COL, LINEAGE_COL
-            )
-        out = base.join(F.broadcast(probe), on=kcols, how="left_semi")
-        return out.drop(BUCKET_COL, RANGE_COL, LINEAGE_COL)
+        return self._scan_probe(
+            commit, self._bloom_dirs(commit, probe), probe, kcols
+        )
 
     def bloom_pruning_report(self, keys: DataFrame) -> dict:
         """Pruning diagnostics for a probe set: how many data dirs the
         filters admitted vs the total — the observability hook the
         pruning tests pin."""
+        commit = self._bloom_commit()
+        if commit is None:
+            return {"total_dirs": 0, "scanned_dirs": 0}
+        probe = keys.select(*self.config.record_key).distinct()
+        return {"total_dirs": len(commit.data),
+                "scanned_dirs": len(self._bloom_dirs(commit, probe))}
+
+    def _bloom_commit(self) -> Commit | None:
+        """The latest commit, with filters ensured even for dirs written
+        before the flag flipped on (the async-indexer backfill path)."""
         if not self.config.bloom_index:
             raise ValueError(f"{self.config.name}: bloom_index not enabled")
         commit = self.latest_commit()
-        if commit is None:
-            return {"total_dirs": 0, "scanned_dirs": 0}
-        self._update_bloom_index(commit)
-        probe = keys.select(*self.config.record_key).distinct()
+        if commit is not None:
+            self._update_bloom_index(commit)
+        return commit
+
+    def _bloom_dirs(self, commit: Commit, probe: DataFrame) -> list[str]:
+        """Data dirs whose filter may hold a probe key (a dir whose
+        filter vanished under clean() is always scanned)."""
+        # one array row per probe key — grouping is explicit, not an
+        # artifact of explode/collect row order
         key_pos = [r["pos"] for r in self._bloom_positions(probe)
                    .collect()]
-        scanned = 0
+        out = []
         for rel in commit.data.values():
             path = self._bloom_path(rel)
-            if not path.exists():
-                scanned += 1
-                continue
-            blob = json.loads(path.read_text())
-            words = {int(w): int(b) for w, b in blob["words"].items()}
-            if any(all(words.get(p // 64, 0) >> (p % 64) & 1 for p in kp)
-                   for kp in key_pos):
-                scanned += 1
-        return {"total_dirs": len(commit.data), "scanned_dirs": scanned}
+            if path.exists():
+                blob = json.loads(path.read_text())
+                words = {int(w): int(b) for w, b in blob["words"].items()}
+                if not any(
+                    all(words.get(p // 64, 0) >> (p % 64) & 1 for p in kp)
+                    for kp in key_pos
+                ):
+                    continue
+            out.append(rel)
+        return out
 
     # ---------- write-time CDC images (Hudi 0.13 cdc read analog) ----------
 
     def _write_cdc_before(
-        self, existing: DataFrame | None, batch: DataFrame, cdcdir: str
+        self,
+        existing: DataFrame | None,
+        batch: DataFrame,
+        cdcdir: str,
+        kcols: list[str] | None = None,
     ) -> None:
         """Persist the stored pre-state of exactly the keys the batch
-        touches. ``existing`` is already pruned to the touched
-        partitions, so this is one semi-join sized by the batch."""
-        kcols = list(self.config.record_key)
+        touches (``kcols``: the merge key, default the record key).
+        ``existing`` is already pruned to the touched partitions, so
+        this is one semi-join sized by the batch."""
+        kcols = kcols or list(self.config.record_key)
         if existing is None:
             # first write into empty partitions: no before-images
             before = batch.limit(0)
@@ -2705,13 +2675,7 @@ class CuratedTable:
         ordf = cfg.source_ordering_field
         cols = list(image_cols or [])
         outs: list[DataFrame] = []
-        for c in self.commits():
-            if begin_version is not None and c.version <= begin_version:
-                continue
-            if end_version is not None and c.version > end_version:
-                continue
-            if not c.changelog:
-                continue  # table services change no rows
+        for c in self._data_commits(begin_version, end_version):
             after = self._read_dirs(c.changelog)
             deleted = (
                 F.coalesce(F.col(DELETED_COL), F.lit(False))
@@ -2842,6 +2806,13 @@ class CuratedTable:
         }
 
 
+def _overlay(data: dict[str, str], touched: list[str],
+             fresh: dict[str, str]) -> dict[str, str]:
+    """``data`` less the ``touched`` keys (a partition whose rows all
+    went must disappear), plus the ``fresh`` dirs."""
+    return {**{k: d for k, d in data.items() if k not in touched}, **fresh}
+
+
 def _version_of(rel_dir: str) -> str:
     """'v00000002/l_returnflag=A' -> 'v00000002'."""
     return rel_dir.split("/", 1)[0]
@@ -2862,9 +2833,13 @@ def _ext_base(d: str) -> str:
 
 
 def _pdir(pcol: str, value: Any) -> str:
-    """Hive-style partition dir name for a value (Spark's default escaping
-    is not replicated here; engine restricts partition columns to simple
-    string/number values, which covers the reference's usage)."""
+    """Hive-style partition dir name for a value, NULL and '' mapping to
+    Spark's default partition as its writer does (Spark's escaping of
+    other values is not replicated here; engine restricts partition
+    columns to simple string/number values, which covers the reference's
+    usage)."""
+    if value is None or value == "":
+        value = NULL_PARTITION
     return f"{pcol}={value}"
 
 

@@ -55,3 +55,52 @@ def test_curve_clustering_on_empty_and_all_null(spark, sf_smoke, tmp_path,
         t.cluster(**{curve: dims})
         assert t.latest_commit().operation == "clustering"
         assert _rows(t.read()) == before, case
+
+
+def _empty_table(spark, tmp_path, orders, **cfg):
+    t = CuratedTable(spark, tmp_path / "e", TableConfig(
+        name="e", record_key=["o_orderkey"], is_partitioned=True,
+        partition_path="o_orderstatus", **cfg))
+    t.bulk_insert(orders.limit(0))
+    return t
+
+
+def _assert_empty_typed(t, orders):
+    got = t.read()
+    assert got is not None, t.latest_commit().operation
+    assert got.count() == 0
+    assert sorted(got.columns) == sorted(orders.columns)
+
+
+def test_empty_partitioned_restore_keeps_schema(spark, sf_smoke, tmp_path):
+    orders = _orders(spark, sf_smoke)
+    t = _empty_table(spark, tmp_path, orders)
+    t.upsert(orders.orderBy("o_orderkey").limit(3))
+    t.restore(1)
+    _assert_empty_typed(t, orders)
+
+
+def test_empty_partitioned_cluster_keeps_schema(spark, sf_smoke, tmp_path):
+    orders = _orders(spark, sf_smoke)
+    t = _empty_table(spark, tmp_path, orders)
+    t.cluster()
+    _assert_empty_typed(t, orders)
+
+
+def test_empty_partitioned_mor_compact_keeps_schema(spark, sf_smoke,
+                                                    tmp_path):
+    orders = _orders(spark, sf_smoke)
+    t = _empty_table(spark, tmp_path, orders, table_type="MERGE_ON_READ")
+    t.upsert(orders.limit(0))
+    _assert_empty_typed(t, orders)
+    t.compact()
+    assert t.latest_commit().operation == "compaction"
+    _assert_empty_typed(t, orders)
+
+
+def test_empty_partitioned_delete_keys(spark, sf_smoke, tmp_path):
+    orders = _orders(spark, sf_smoke)
+    t = _empty_table(spark, tmp_path, orders, deletion_vectors=True)
+    t.delete_keys(orders.select("o_orderkey").limit(3))
+    assert t.latest_commit().operation == "delete_vector"
+    _assert_empty_typed(t, orders)
