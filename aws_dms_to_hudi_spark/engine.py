@@ -53,7 +53,7 @@ from aws_dms_to_hudi_spark.plans import (
     StepResult,
 )
 from aws_dms_to_hudi_spark.sources.parquet_dfs import ParquetDFSSource
-from aws_dms_to_hudi_spark.storage import CuratedTable
+from aws_dms_to_hudi_spark.storage import Commit, CuratedTable
 
 RETAINED_COMMITS = 5  # handler.py:90-91
 KEEP_MIN_COMMITS = 10  # handler.py:92-93
@@ -185,7 +185,8 @@ class Engine:
         """
         table = CuratedTable(self.spark, plan.target_root, plan.config)
         source = ParquetDFSSource(self.spark, plan.source_root)
-        batch, ckpt = source.read_new(table.checkpoint())
+        latest = table.latest_commit()  # the round's one timeline read
+        batch, ckpt = source.read_new(latest.checkpoint if latest else {})
         if batch is None:
             return None
         batch = apply_transformer_sql(self.spark, batch, plan.config.transformer_sql)
@@ -205,14 +206,14 @@ class Engine:
                     str(Path(plan.target_root) / "_quarantine")
                 )
 
-        if plan.operation == "bulk_insert" or table.latest_commit() is None:
+        if plan.operation == "bulk_insert" or latest is None:
             commit = table.bulk_insert(batch, checkpoint=ckpt)
         else:
             commit = table.upsert(batch, checkpoint=ckpt)
             # Inline table services, mirroring the delta-pipeline conf
             # (clean.automatic, clustering.inline, compact.inline for MOR —
             # handler.py:73,81,90-93,112-113).
-            if table.latest_commit().deltas and self._should_compact(table):
+            if self._should_compact(commit):
                 commit = table.compact()
             table.clean(RETAINED_COMMITS)
             table.archive(KEEP_MIN_COMMITS, KEEP_MAX_COMMITS)
@@ -227,11 +228,11 @@ class Engine:
         return commit.version
 
     @staticmethod
-    def _should_compact(table: CuratedTable, max_deltas: int = 3) -> bool:
-        """MOR inline compaction trigger: delta-commit count threshold
-        (Hudi's ``compact.inline.max.delta.commits`` analogue)."""
-        c = table.latest_commit()
-        return c is not None and len(c.deltas) >= max_deltas
+    def _should_compact(commit: Commit, max_deltas: int = 3) -> bool:
+        """MOR inline compaction trigger on the commit just written:
+        delta-commit count threshold (Hudi's
+        ``compact.inline.max.delta.commits`` analogue)."""
+        return len(commit.deltas) >= max_deltas
 
     # ---------- reads ----------
 

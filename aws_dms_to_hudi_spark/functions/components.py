@@ -923,7 +923,8 @@ def top_deg_meta(spark, lineitem: str, cache_key=None,
                  n: int = KHOP_SEEDS) -> tuple[list[int], int]:
     """``(top-n seed node ids, max degree)`` of the co-purchase degree
     relation — the seed set shared by the seeded graph trio (k-hop
-    q255, PPR q264) plus the overflow bound PPR folds into a literal.
+    q255, PPR q264) plus the overflow bound PPR folds into a literal;
+    ``([], 0)`` when the relation is empty (no order has two parts).
     Bounded driver values (n rows ordered by (d DESC, node ASC) — the
     oracle's seed rule — and one int); computed once per (session,
     corpus) off the session-cached deg artifact, because deriving them
@@ -934,7 +935,8 @@ def top_deg_meta(spark, lineitem: str, cache_key=None,
         _sym, deg = copurchase_sym_deg(spark, lineitem, cache_key)
         rows = (deg.orderBy(F.col("d").desc(), F.col("node").asc())
                 .limit(n).select("node", "d").collect())
-        return [int(r["node"]) for r in rows], int(rows[0]["d"])
+        return ([int(r["node"]) for r in rows],
+                int(rows[0]["d"]) if rows else 0)
 
     return _shared(spark, "top_deg_meta", cache_key, build, n)
 
@@ -1213,11 +1215,13 @@ def khop_reachability(spark, lineitem: str, cache_key: str | None = None,
     # RDD (a defaultParallelism-partition LogicalRDD for 8 rows, one
     # 32-task stage per downstream reference); VALUES is a true
     # single-partition LocalRelation.
+    # No seeds (empty degree relation): one typed row, filtered out.
     vals = ", ".join(
         f"(CAST({s} AS BIGINT), CAST({s} AS BIGINT), 0)"
-        for s in seed_nodes)
+        for s in seed_nodes) or "(CAST(NULL AS BIGINT), CAST(NULL AS BIGINT), 0)"
     r = spark.sql(f"SELECT seed, node, hop FROM "
-                  f"(VALUES {vals}) AS t(seed, node, hop)")
+                  f"(VALUES {vals}) AS t(seed, node, hop)"
+                  + ("" if seed_nodes else " WHERE FALSE"))
     for h in range(1, hops + 1):
         frontier = r.filter(F.col("hop") == h - 1)
         nxt = (F.broadcast(frontier)
@@ -1407,7 +1411,7 @@ sym AS {m}(
         lambda a, b: f"({a} // {b})")
     restart = idiv(f"15 * {PR_SCALE}", "100")
     literal = seed_values is not None and max_d is not None
-    lim = (str(9223372036854775807 // (85 * max_d)) if literal
+    lim = (str(9223372036854775807 // (85 * max(max_d, 1))) if literal
            else idiv("9223372036854775807", "(85 * bb.mx)"))
     if dialect == "spark":
         guard = (lambda v: f"(CASE WHEN {v} <= {lim} THEN CAST({v} AS "
@@ -1418,9 +1422,12 @@ sym AS {m}(
                  f"BIGINT) ELSE CAST(error('ppr int64 overflow bound')"
                  f" AS BIGINT) END)")
     if literal:
-        vals = ", ".join(f"(CAST({s} AS BIGINT))" for s in seed_values)
+        # no seeds (empty degree relation): one typed row, filtered out
+        vals = (", ".join(f"(CAST({s} AS BIGINT))" for s in seed_values)
+                or "(CAST(NULL AS BIGINT))")
         seeds_cte = (f"seeds AS (SELECT seed FROM "
-                     f"(VALUES {vals}) AS t(seed))")
+                     f"(VALUES {vals}) AS t(seed)"
+                     f"{'' if seed_values else ' WHERE FALSE'})")
     else:
         seeds_cte = (f"seeds AS {m}(\n  SELECT node AS seed FROM deg "
                      f"ORDER BY d DESC, node ASC LIMIT {seeds}\n),\n"

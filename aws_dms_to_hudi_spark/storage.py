@@ -39,6 +39,13 @@ Scale design:
   its partition path, so a key updated into another partition leaves its
   old row in place. The layout's range exchange on those columns serves
   the merge window too: one exchange, one sort per sync round.
+- **An unpartitioned table is the one-partition case** (Hudi's
+  ``NonpartitionedKeyGenerator``: partition path ``""``). Its data map
+  is ``{"": vdir}``, and every COW upsert touches that one partition and
+  merges on the record key. Every snapshot of every layout — bulk
+  insert, upsert, overwrite, compaction, clustering, partition
+  evolution — is written by one ``_write_snapshot``; the
+  ``_layout_exchange`` placed above it is a no-op when unpartitioned.
 - **MOR** (``hoodie.compact.inline`` for MERGE_ON_READ tables,
   ``handler.py:112-113``): writes append a precombined delta dir (cheap,
   no table-size-dependent work) and reads merge base ∪ deltas on the fly;
@@ -66,6 +73,7 @@ from aws_dms_to_hudi_spark.config import MERGE_ON_READ, TableConfig
 from aws_dms_to_hudi_spark.operators.merge import (
     _pick_winners,
     _union_tagged,
+    apply_deletes,
     precombine,
     upsert_merge,
 )
@@ -183,6 +191,9 @@ BLOOM_K = 5  # hash functions; fpp ~ (1 - e^(-kn/m))^k
 
 LINEAGE_COL = "_commit_version"  # Iceberg v3 row-lineage analog
 NULL_PARTITION = "__HIVE_DEFAULT_PARTITION__"  # Spark's dir for NULL / ''
+ZORDER_COL = "__zorder"  # clustering's curve key; sorted on, never stored
+# In-memory plan-stat bytes per write task (see _layout_exchange)
+WRITE_ADVISORY_BYTES = 8 << 20
 
 
 class ConcurrentWriteConflict(RuntimeError):
@@ -331,15 +342,16 @@ class CuratedTable:
             return RANGE_COL
         return None
 
-    def _bucketize(self, df: DataFrame) -> DataFrame:
+    def _bucketize(self, df: DataFrame, prev: Commit | None) -> DataFrame:
         """Attach the synthetic layout column (bucket or key-range id)
-        when the table has one and ``df`` lacks it."""
+        when the table has one and ``df`` lacks it; ``prev`` is the
+        latest commit, which holds frozen key-range cuts."""
         pcol = self._pcol
         if pcol in (BUCKET_COL, RANGE_COL) and pcol not in df.columns:
-            return df.withColumn(pcol, self._layout_expr(df))
+            return df.withColumn(pcol, self._layout_expr(df, prev))
         return df
 
-    def _layout_expr(self, df: DataFrame):
+    def _layout_expr(self, df: DataFrame, prev: Commit | None):
         """Each row's layout value: the layout column when ``df`` has it,
         else the key-range group or the bucket id pmod(xxhash64(keys), N)
         — functions of the key, so existing rows (id read back from the
@@ -348,16 +360,15 @@ class CuratedTable:
         if cfg.is_partitioned or self._pcol in df.columns:
             return F.col(self._pcol)
         if cfg.key_range_groups:
-            return self._range_group_expr(self._key_bounds(df))
+            return self._range_group_expr(self._key_bounds(df, prev))
         return F.pmod(
             F.xxhash64(*cfg.record_key), F.lit(cfg.num_buckets)
         ).cast("int")
 
-    def _key_bounds(self, df: DataFrame) -> list:
+    def _key_bounds(self, df: DataFrame, prev: Commit | None) -> list:
         """Range-group cut points: from the manifest once frozen, else
         (first bulk insert) an equi-depth percentile sketch of the first
         record-key column over the incoming batch."""
-        prev = self.latest_commit()
         if prev is not None and prev.key_bounds is not None:
             return prev.key_bounds
         g = int(self.config.key_range_groups)
@@ -384,12 +395,11 @@ class CuratedTable:
         )
         return F.when(kcol.isNull(), F.lit(0)).otherwise(n_below)
 
-    def _commit_key_bounds(self) -> list | None:
-        """key_bounds for a NEW commit: frozen manifest value, else the
-        cuts computed by this very write (bulk insert)."""
+    def _commit_key_bounds(self, prev: Commit | None) -> list | None:
+        """key_bounds for a NEW commit after ``prev``: frozen manifest
+        value, else the cuts computed by this very write (bulk insert)."""
         if not self.config.key_range_groups:
             return None
-        prev = self.latest_commit()
         if prev is not None and prev.key_bounds is not None:
             return prev.key_bounds
         return getattr(self, "_computed_bounds", None)
@@ -716,8 +726,6 @@ class CuratedTable:
             df, self.config.record_key, self.config.source_ordering_field
         )
         if drop_deleted:
-            from aws_dms_to_hudi_spark.operators.merge import apply_deletes
-
             df = apply_deletes(df)
         if BUCKET_COL in df.columns or RANGE_COL in df.columns:
             df = df.drop(BUCKET_COL, RANGE_COL)
@@ -797,54 +805,65 @@ class CuratedTable:
 
     # ---------- write path ----------
 
+    def _layout_exchange(self, df: DataFrame,
+                         sort_cols: list[str]) -> DataFrame:
+        """PARTITION_SORT exchange on (layout column, sort columns); the
+        frame unchanged when the table has no layout column.
 
-    def _partition_sorted(self, df: DataFrame, pcol: str,
-                          sort_cols: list[str]) -> DataFrame:
-        """PARTITION_SORT layout: :meth:`_range_exchange` on (pcol, sort
-        keys), then sorted within each task."""
-        cols = [pcol, *sort_cols]
-        return self._range_exchange(df, cols).sortWithinPartitions(*cols)
-
-    def _range_exchange(self, df: DataFrame, cols: list[str]) -> DataFrame:
-        """PARTITION_SORT exchange with write parallelism decoupled from
-        the partition-value count. ``repartition(pcol)`` alone caps the
-        write at one task per distinct partition value — a 3-partition
-        table writes 100 TB with 3 tasks. Range-repartitioning on
-        (pcol, sort keys) keeps every output file inside one partition
-        (each task holds a contiguous slice of the global (pcol, key)
-        order, so a per-task sort orders the file); as a bonus the
-        per-file key ranges are disjoint, which is exactly what
-        column-stats / key-range pruning wants.
+        Range-repartitioning decouples write parallelism from the
+        partition-value count: ``repartition(pcol)`` alone caps the write
+        at one task per distinct value — a 3-partition table writes
+        100 TB with 3 tasks. Each task holds a contiguous slice of the
+        global (pcol, key) order, so every output file stays inside one
+        partition, a per-task sort orders it, and per-file key ranges are
+        disjoint, which is what column-stats / key-range pruning wants.
 
         Width is SIZE-ADAPTIVE, not a cluster constant (guide §2.2/§6):
-        ``clamp(ceil(est_bytes / advisory), 1, defaultParallelism)``.
-        Any real batch saturates the defaultParallelism cap (identical
-        to the old fixed-width plan), so the advisory only bites on
-        SMALL batches — a CDC delta written at full cluster width
-        produces one near-empty file per task, the small-files problem
-        §6 warns about, and measured 1.5× slower here than right-sized
-        width (fixed-32 1.93 s vs 1.24 s min at an 8-task width on the
-        ~55 MB sf0.1 lineitem batch). The advisory is the IN-MEMORY
-        plan-stat size per write task (parquet+snappy lands ~4×
-        smaller on disk); override with
-        ``spark.graft.write.advisoryPartitionBytes`` — production
-        lakes targeting 128 MB+ files set 512m+, which still saturates
-        the cap for any batch worth a wide write."""
+        ``clamp(ceil(est_bytes / WRITE_ADVISORY_BYTES), 1,
+        defaultParallelism)``. Any real batch saturates the cap, so the
+        advisory only bites on SMALL batches — a CDC delta written at
+        full cluster width produces one near-empty file per task, the
+        small-files problem §6 warns about, and measured 1.5× slower here
+        than right-sized width (fixed-32 1.93 s vs 1.24 s min at an
+        8-task width on the ~55 MB sf0.1 lineitem batch). The advisory
+        is the IN-MEMORY plan-stat size per write task (parquet+snappy
+        lands ~4× smaller on disk)."""
+        pcol = self._pcol
+        if pcol is None:
+            return df
         n_max = max(self.spark.sparkContext.defaultParallelism, 1)
         try:
-            adv = self.spark.conf.get(
-                "spark.graft.write.advisoryPartitionBytes", "8m")
-            units = {"k": 1 << 10, "m": 1 << 20, "g": 1 << 30}
-            adv_b = (int(adv[:-1]) * units[adv[-1].lower()]
-                     if adv[-1].lower() in units else int(adv))
             est = int(df._jdf.queryExecution().optimizedPlan()
                       .stats().sizeInBytes())
             # Opaque nodes report 2^63-ish garbage; the cap absorbs it
-            # (falls back to the old full-width behavior).
-            n = max(1, min(n_max, -(-est // max(adv_b, 1))))
+            # (falls back to the full-width behavior).
+            n = max(1, min(n_max, -(-est // WRITE_ADVISORY_BYTES)))
         except Exception:
             n = n_max
-        return df.repartitionByRange(n, *cols)
+        return df.repartitionByRange(n, pcol, *sort_cols)
+
+    def _write_snapshot(self, df: DataFrame, vdir: str,
+                        sort_cols: list[str]) -> dict[str, str]:
+        """Write ``df`` as snapshot dir ``vdir``, each task sorted by
+        (layout column, ``sort_cols``), clustering's curve column
+        dropped; returns the data map of the dirs written. An
+        unpartitioned table is the one-partition case, ``{"": vdir}``
+        (Hudi's non-partitioned key generator). A partitioned write of
+        zero rows makes no partition dir and maps none — never the
+        unpartitioned ``""`` key, which a partitioned handle refuses."""
+        pcol = self._pcol
+        cols = [pcol, *sort_cols] if pcol else list(sort_cols)
+        out = df.sortWithinPartitions(*cols).drop(ZORDER_COL)
+        base = self.root / vdir
+        if pcol is None:
+            out.write.mode("overwrite").parquet(str(base))
+            return {"": vdir}
+        out.write.mode("overwrite").partitionBy(pcol).parquet(str(base))
+        return {
+            child.name: f"{vdir}/{child.name}"
+            for child in sorted(base.iterdir())
+            if child.is_dir() and "=" in child.name
+        }
 
     def bootstrap(
         self, source_dir: str, checkpoint: dict[str, Any] | None = None
@@ -876,7 +895,8 @@ class CuratedTable:
         (bootstrapped files lack the engine's layout columns).
         """
         cfg = self.config
-        if self.latest_commit() is not None:
+        prev = self.latest_commit()
+        if prev is not None:
             raise ValueError(
                 f"{cfg.name}: bootstrap requires an empty table "
                 "(onboarding is the FIRST commit)"
@@ -929,7 +949,7 @@ class CuratedTable:
                 f"{cfg.name}: bootstrap source lacks required "
                 f"column(s) {missing}"
             )
-        version = self._next_version()
+        version = self._next_version(prev)
         # Record-level index: the bootstrap index build (Hudi writes one
         # during METADATA_ONLY bootstrap too) — reads key columns only,
         # the single whole-source scan bootstrap performs, and only when
@@ -945,7 +965,7 @@ class CuratedTable:
             # the onboarded state IS its own change set (as bulk_insert
             # does) — incremental readers see the full initial load
             changelog=list(data.values()),
-            key_bounds=self._commit_key_bounds(),
+            key_bounds=self._commit_key_bounds(prev),
         )
         self._write_commit(commit)
         return commit
@@ -960,26 +980,16 @@ class CuratedTable:
         repartition on the partition column + sortWithinPartitions(keys)
         gives exactly that layout with one shuffle.
         """
-        version = self._next_version()
+        prev = self.latest_commit()
+        version = self._next_version(prev)
         vdir = f"v{version:08d}"
         cfg = self.config
         df = self._stamp_lineage(df, version)
         df = precombine(df, cfg.record_key, cfg.source_ordering_field)
-        from aws_dms_to_hudi_spark.operators.merge import apply_deletes
-
-        df = apply_deletes(df)
-        pcol = self._pcol
-        if pcol is not None:
-            df = self._bucketize(df)
-            out = self._partition_sorted(df, pcol, list(cfg.record_key))
-            out.write.mode("overwrite").partitionBy(pcol).parquet(
-                str(self.root / vdir)
-            )
-            data = self._scan_partition_dirs(vdir)
-        else:
-            out = df.sortWithinPartitions(*cfg.record_key)
-            out.write.mode("overwrite").parquet(str(self.root / vdir))
-            data = {"": vdir}
+        df = self._bucketize(apply_deletes(df), prev)
+        keys = list(cfg.record_key)
+        data = self._write_snapshot(self._layout_exchange(df, keys), vdir,
+                                    keys)
         self._update_record_index(df)
         self._update_secondary_index(df)
         commit = Commit(
@@ -991,9 +1001,9 @@ class CuratedTable:
             # the initial load IS its own change set; reference the data
             # dirs rather than writing the batch twice
             changelog=list(data.values()),
-            key_bounds=self._commit_key_bounds(),
+            key_bounds=self._commit_key_bounds(prev),
             col_stats=self._assemble_stats(None, data, vdir),
-            schema=None if data else out.schema.json(),
+            schema=None if data else df.schema.json(),
         )
         self._write_commit(commit)
         return commit
@@ -1094,23 +1104,11 @@ class CuratedTable:
         )
         newt = CuratedTable(self.spark, self.root, ncfg,
                             lock_provider=self.lock_provider)
-        version = self._next_version()
+        version = self._next_version(prev)
         vdir = f"v{version:08d}"
-        if new_partition_path is not None:
-            (
-                newt._partition_sorted(
-                    df, new_partition_path, list(cfg.record_key)
-                )
-                .write.mode("overwrite")
-                .partitionBy(new_partition_path)
-                .parquet(str(self.root / vdir))
-            )
-            data = newt._scan_partition_dirs(vdir)
-        else:
-            df.sortWithinPartitions(*cfg.record_key).write.mode(
-                "overwrite"
-            ).parquet(str(self.root / vdir))
-            data = {"": vdir}
+        keys = list(cfg.record_key)
+        data = newt._write_snapshot(newt._layout_exchange(df, keys), vdir,
+                                    keys)
         commit = Commit(
             version=version,
             operation="evolve_partitioning",
@@ -1119,7 +1117,7 @@ class CuratedTable:
             checkpoint=checkpoint or prev.checkpoint,
             parent=prev.version,
             changelog=[],  # a rewrite changes no rows
-            key_bounds=newt._commit_key_bounds(),
+            key_bounds=newt._commit_key_bounds(prev),
             col_stats=newt._assemble_stats(None, data, vdir),
             dv=[],  # materialized by the rewrite, like clustering
             schema=None if data else df.schema.json(),
@@ -1332,9 +1330,11 @@ class CuratedTable:
     ) -> Commit:
         """Merge one CDC batch (D4+D5+D6) into a new table version.
 
-        COW: partition-pruned rewrite (only partitions present in the batch
-        shuffle/rewrite, merged on (partition value, record key); the rest
-        carry forward by reference).
+        COW: partition-pruned rewrite — only the partitions present in
+        the batch are read, merged on (layout value, record key) and
+        rewritten; the rest carry forward by reference. An unpartitioned
+        table is the one-partition case: its one partition ``""`` is
+        always touched, and the merge key is the record key.
         MOR: append a precombined delta dir; merge happens at read/compact.
         """
         cfg = self.config
@@ -1342,7 +1342,7 @@ class CuratedTable:
         self._check_spec(prev)
         if prev is None:
             return self.bulk_insert(batch, checkpoint)
-        version = self._next_version()
+        version = self._next_version(prev)
 
         if cfg.table_type == MERGE_ON_READ:
             return self._append_delta(batch, version, prev, checkpoint)
@@ -1350,28 +1350,11 @@ class CuratedTable:
         vdir = f"v{version:08d}"
         cldir = f"{vdir}_changelog"
         batch, touched = self._write_changelog(
-            self._stamp_lineage(batch, version), cldir
+            self._stamp_lineage(batch, version), cldir, prev
         )
         cdcdir = f"{vdir}_cdcbefore" if cfg.cdc_images else None
-        if touched is not None:
-            fresh, merged = self._merge_touched(
-                prev, batch, touched, vdir, cdcdir
-            )
-            new_data = _overlay(prev.data, touched, fresh)
-        else:
-            existing = self._apply_dv(
-                prev, self._read_dirs(list(prev.data.values()))
-            )
-            if cdcdir:
-                self._write_cdc_before(existing, batch, cdcdir)
-            merged = upsert_merge(
-                existing, batch, cfg.record_key, cfg.source_ordering_field
-            )
-            merged.sortWithinPartitions(*cfg.record_key).write.mode(
-                "overwrite"
-            ).parquet(str(self.root / vdir))
-            new_data = {"": vdir}
-
+        fresh, merged = self._merge_touched(prev, batch, touched, vdir, cdcdir)
+        new_data = _overlay(prev.data, touched, fresh)
         commit = Commit(
             version=version,
             operation="upsert",
@@ -1379,7 +1362,7 @@ class CuratedTable:
             checkpoint=checkpoint or {},
             parent=prev.version,
             changelog=[cldir],
-            key_bounds=self._commit_key_bounds(),
+            key_bounds=self._commit_key_bounds(prev),
             col_stats=self._assemble_stats(prev, new_data, vdir),
             cdc_dir=cdcdir,
             dv=list(prev.dv),
@@ -1391,12 +1374,13 @@ class CuratedTable:
         return commit
 
     def _write_changelog(
-        self, batch: DataFrame, cldir: str
-    ) -> tuple[DataFrame, list[str] | None]:
+        self, batch: DataFrame, cldir: str, prev: Commit
+    ) -> tuple[DataFrame, list[str]]:
         """Write the precombined change set (Hudi CDC analog; it feeds
         incremental reads) and read it back with the schema just written,
-        which keeps the merge plan small. Also returns the partition keys
-        the write observed (None when unpartitioned)."""
+        which keeps the merge plan small. Also returns the data-map keys
+        the batch touches: the partition keys the write observed, or
+        ``[""]``, the one partition of an unpartitioned table."""
         cfg = self.config
         pcol = self._pcol
         out = precombine(batch, cfg.record_key, cfg.source_ordering_field)
@@ -1405,7 +1389,7 @@ class CuratedTable:
             # node in the write's final stage: AQE drops one inside a stage
             # it replaces by an empty relation, and no metrics arrive.
             obs = Observation()
-            v = self._layout_expr(out)
+            v = self._layout_expr(out, prev)
             out = out.observe(obs, F.collect_set(v).alias("values"),
                               F.bool_or(v.isNull()).alias("has_null"))
         out.write.mode("overwrite").parquet(str(self.root / cldir))
@@ -1413,10 +1397,10 @@ class CuratedTable:
             str(self.root / cldir)
         )
         if pcol is None:
-            return back, None
+            return back, [""]
         m = obs.get
         values = [*m["values"], *([None] if m["has_null"] else [])]
-        return self._bucketize(back), [_pdir(pcol, v) for v in values]
+        return self._bucketize(back, prev), [_pdir(pcol, v) for v in values]
 
     def _merge_touched(
         self,
@@ -1430,10 +1414,12 @@ class CuratedTable:
         under ``vdir``; returns (partition dirs written, merged frame).
         The merge key is (layout value, record key) — Hudi's non-global
         index — so the layout's range exchange also serves the winner
-        window: one exchange, and one sort that orders the files too."""
+        window: one exchange, and one sort that orders the files too. An
+        unpartitioned table merges its one partition on the record key;
+        the window's own exchange serves it."""
         cfg = self.config
-        pcol = self._pcol
-        mkey = [pcol, *cfg.record_key]
+        keys = list(cfg.record_key)
+        mkey = [self._pcol, *keys] if self._pcol else keys
         existing = self._read_dirs(
             [prev.data[k] for k in touched if k in prev.data]
         )
@@ -1442,14 +1428,11 @@ class CuratedTable:
         if cdcdir:
             self._write_cdc_before(existing, batch, cdcdir, mkey)
         merged = _pick_winners(
-            self._range_exchange(_union_tagged(existing, batch), mkey),
+            self._layout_exchange(_union_tagged(existing, batch), keys),
             mkey,
             cfg.source_ordering_field,
         )
-        merged.sortWithinPartitions(*mkey).write.mode(
-            "overwrite"
-        ).partitionBy(pcol).parquet(str(self.root / vdir))
-        return self._scan_partition_dirs(vdir), merged
+        return self._write_snapshot(merged, vdir, keys), merged
 
     # ---------- deletion vectors (Delta Lake DV analog) ----------
 
@@ -1523,7 +1506,7 @@ class CuratedTable:
         self._check_spec(prev)
         if prev is None:
             raise ValueError(f"{cfg.name}: nothing committed yet")
-        version = self._next_version()
+        version = self._next_version(prev)
         dvdir = f"v{version:08d}_dv"
         kcols = list(cfg.record_key)
         snap = self._apply_dv(prev, self._snapshot(prev))  # no dup deletes
@@ -1545,7 +1528,7 @@ class CuratedTable:
             checkpoint=checkpoint or dict(prev.checkpoint),
             parent=prev.version,
             changelog=[],
-            key_bounds=self._commit_key_bounds(),
+            key_bounds=self._commit_key_bounds(prev),
             col_stats=prev.col_stats,
             dv=[*prev.dv, dvdir],
             schema=prev.schema,
@@ -1612,39 +1595,26 @@ class CuratedTable:
             return self.bulk_insert(batch, checkpoint)
         if prev.deltas:
             prev = self.compact() or prev
-        version = self._next_version()
+        version = self._next_version(prev)
         vdir = f"v{version:08d}"
         cfg = self.config
         batch = self._stamp_lineage(batch, version)
         batch = precombine(batch, cfg.record_key, cfg.source_ordering_field)
-        from aws_dms_to_hudi_spark.operators.merge import apply_deletes
-
+        batch = self._bucketize(batch, prev)
         pcol = self._pcol
-        if pcol is not None:
-            batch = self._bucketize(batch)
-            # touched = partitions the batch DECLARES — computed BEFORE
-            # delete application, so a partition arriving as pure
-            # tombstones still replaces (to empty) instead of silently
-            # carrying the old rows forward (mirrors the upsert rule)
-            touched = [
-                r[0] for r in batch.select(pcol).distinct().collect()
-            ]
-            batch = apply_deletes(batch)
-            out = self._partition_sorted(batch, pcol, list(cfg.record_key))
-            out.write.mode("overwrite").partitionBy(pcol).parquet(
-                str(self.root / vdir)
-            )
-            fresh = self._scan_partition_dirs(vdir)
-            new_data = _overlay(
-                prev.data, [_pdir(pcol, v) for v in touched], fresh
-            )
-        else:
-            batch = apply_deletes(batch)
-            batch.sortWithinPartitions(*cfg.record_key).write.mode(
-                "overwrite"
-            ).parquet(str(self.root / vdir))
-            fresh = {"": vdir}
-            new_data = fresh
+        # touched = partitions the batch DECLARES — computed BEFORE delete
+        # application, so a partition arriving as pure tombstones still
+        # replaces (to empty) instead of silently carrying the old rows
+        # forward (mirrors the upsert rule). Unpartitioned: the one
+        # partition "", so the overlay is the full replacement.
+        touched = [""] if pcol is None else [
+            _pdir(pcol, r[0]) for r in batch.select(pcol).distinct().collect()
+        ]
+        batch = apply_deletes(batch)
+        keys = list(cfg.record_key)
+        fresh = self._write_snapshot(self._layout_exchange(batch, keys), vdir,
+                                     keys)
+        new_data = _overlay(prev.data, touched, fresh)
         self._update_record_index(batch)
         self._update_secondary_index(batch)
         commit = Commit(
@@ -1654,7 +1624,7 @@ class CuratedTable:
             checkpoint=checkpoint or {},
             parent=prev.version,
             changelog=list(fresh.values()),
-            key_bounds=self._commit_key_bounds(),
+            key_bounds=self._commit_key_bounds(prev),
             col_stats=self._assemble_stats(prev, new_data, vdir),
             dv=list(prev.dv),
             schema=None if new_data else batch.schema.json(),
@@ -1708,8 +1678,8 @@ class CuratedTable:
         # index entries map to the key's (eventual, post-compaction) dir
         # key, which the layout column determines — so compaction/
         # clustering never invalidate them
-        self._update_record_index(self._bucketize(deduped))
-        self._update_secondary_index(self._bucketize(deduped))
+        self._update_record_index(self._bucketize(deduped, prev))
+        self._update_secondary_index(self._bucketize(deduped, prev))
         commit = Commit(
             version=version,
             operation="delta_commit",
@@ -1719,7 +1689,7 @@ class CuratedTable:
             parent=prev.version,
             # the delta log is already the precombined change set; reuse it
             changelog=[ddir],
-            key_bounds=self._commit_key_bounds(),
+            key_bounds=self._commit_key_bounds(prev),
             # base dirs unchanged; deltas carry no stats (pruning is
             # disabled while deltas are outstanding anyway)
             col_stats=prev.col_stats,
@@ -1737,25 +1707,12 @@ class CuratedTable:
         if prev is None or not prev.deltas:
             return None
         merged = self.read(include_lineage=True)  # drops any bucket col; lineage kept
-        version = self._next_version()
+        version = self._next_version(prev)
         vdir = f"v{version:08d}"
-        cfg = self.config
-        pcol = self._pcol
-        if pcol is not None:
-            (
-                self._partition_sorted(
-                    self._bucketize(merged), pcol, list(cfg.record_key)
-                )
-                .write.mode("overwrite")
-                .partitionBy(pcol)
-                .parquet(str(self.root / vdir))
-            )
-            data = self._scan_partition_dirs(vdir)
-        else:
-            merged.sortWithinPartitions(*cfg.record_key).write.mode(
-                "overwrite"
-            ).parquet(str(self.root / vdir))
-            data = {"": vdir}
+        keys = list(self.config.record_key)
+        data = self._write_snapshot(
+            self._layout_exchange(self._bucketize(merged, prev), keys), vdir,
+            keys)
         commit = Commit(
             version=version,
             operation="compaction",
@@ -1763,7 +1720,7 @@ class CuratedTable:
             deltas=[],
             checkpoint=prev.checkpoint,
             parent=prev.version,
-            key_bounds=self._commit_key_bounds(),
+            key_bounds=self._commit_key_bounds(prev),
             col_stats=self._assemble_stats(prev, data, vdir),
             schema=None if data else merged.schema.json(),
         )
@@ -1860,41 +1817,22 @@ class CuratedTable:
             return None
         self._check_spec(prev)
         df = self.read(include_lineage=True)  # drops any bucket col; lineage kept
-        version = self._next_version()
+        version = self._next_version(prev)
         vdir = f"v{version:08d}"
-        cfg = self.config
-        pcol = self._pcol
-        zcol = "__zorder"
         if zorder_by:
-            df = df.withColumn(zcol, self._zorder_key(df, zorder_by))
-            sort_cols = [zcol]
+            df = df.withColumn(ZORDER_COL, self._zorder_key(df, zorder_by))
         elif hilbert_by:
-            df = self._with_hilbert_key(df, hilbert_by, zcol)
-            zorder_by = hilbert_by  # downstream drop/partition logic shared
-            sort_cols = [zcol]
-        else:
-            sort_cols = list(cfg.record_key)
-        if pcol is not None:
-            out = self._partition_sorted(
-                self._bucketize(df), pcol, list(sort_cols)
-            )
-            if zorder_by:
-                out = out.drop(zcol)
-            out.write.mode("overwrite").partitionBy(pcol).parquet(
-                str(self.root / vdir)
-            )
-            data = self._scan_partition_dirs(vdir)
+            df = self._with_hilbert_key(df, hilbert_by, ZORDER_COL)
+        sort_cols = ([ZORDER_COL] if zorder_by or hilbert_by
+                     else list(self.config.record_key))
+        if self._pcol is not None:
+            df = self._layout_exchange(self._bucketize(df, prev), sort_cols)
         else:
             n = target_partitions or max(
                 1, self.spark.sparkContext.defaultParallelism // 4
             )
-            out = df.repartitionByRange(n, *sort_cols).sortWithinPartitions(
-                *sort_cols
-            )
-            if zorder_by:
-                out = out.drop(zcol)
-            out.write.mode("overwrite").parquet(str(self.root / vdir))
-            data = {"": vdir}
+            df = df.repartitionByRange(n, *sort_cols)
+        data = self._write_snapshot(df, vdir, sort_cols)
         commit = Commit(
             version=version,
             operation="clustering",
@@ -1902,9 +1840,9 @@ class CuratedTable:
             deltas=list(prev.deltas),
             checkpoint=prev.checkpoint,
             parent=prev.version,
-            key_bounds=self._commit_key_bounds(),
+            key_bounds=self._commit_key_bounds(prev),
             col_stats=self._assemble_stats(prev, data, vdir),
-            schema=None if data else out.schema.json(),
+            schema=None if data else df.drop(ZORDER_COL).schema.json(),
         )
         self._write_commit(commit)
         return commit
@@ -1966,14 +1904,14 @@ class CuratedTable:
             raise ValueError(f"version {version} not on timeline")
         prev = self.latest_commit()
         commit = Commit(
-            version=self._next_version(),
+            version=self._next_version(prev),
             operation="restore",
             data=dict(target.data),
             deltas=list(target.deltas),
             checkpoint=dict(target.checkpoint),
             parent=prev.version if prev else None,
             changelog=[],
-            key_bounds=self._commit_key_bounds(),
+            key_bounds=self._commit_key_bounds(prev),
             col_stats=target.col_stats,
             dv=list(target.dv),
             schema=target.schema,
@@ -2156,7 +2094,7 @@ class CuratedTable:
         token = uuid.uuid4().hex[:8]
         vtoken = f"v{prev.version + 1:08d}w{token}"
         cldir = f"{vtoken}_changelog"
-        batch, touched = self._write_changelog(batch, cldir)
+        batch, touched = self._write_changelog(batch, cldir, prev)
         fresh, _ = self._merge_touched(prev, batch, touched, vtoken)
         stats = (
             self._stats_for_vdir(vtoken) if cfg.stats_columns else None
@@ -2215,7 +2153,7 @@ class CuratedTable:
                 checkpoint=checkpoint or {},
                 parent=latest.version,
                 changelog=list(staged.changelog),
-                key_bounds=self._commit_key_bounds(),
+                key_bounds=self._commit_key_bounds(latest),
                 col_stats=col_stats,
                 schema=None if new_data
                 else self._snapshot(latest).schema.json(),
@@ -2297,7 +2235,8 @@ class CuratedTable:
             shutil.rmtree(self.root / RLI_DIR)
         self._rli_table = None
         if snap is not None:
-            self._update_record_index(self._bucketize(snap))
+            self._update_record_index(
+                self._bucketize(snap, self.latest_commit()))
 
     def _update_record_index(self, batch: DataFrame) -> None:
         """Upsert the batch's (key -> dir key) entries; tombstones delete
@@ -2482,7 +2421,8 @@ class CuratedTable:
         if snap is not None:
             # read() drops synthetic layout columns; re-attach so the
             # per-row dir key is computable on bucket/range tables
-            self._update_secondary_index(self._bucketize(snap))
+            self._update_secondary_index(
+                self._bucketize(snap, self.latest_commit()))
 
     def lookup_by(self, values: DataFrame) -> DataFrame | None:
         """Current rows whose indexed column matches any probe value,
@@ -2762,48 +2702,29 @@ class CuratedTable:
 
     def _stats_for_vdir(self, vdir: str) -> dict[str, dict[str, list]]:
         """One grouped min/max aggregate over a freshly-written version
-        dir -> {rel_dir: {col: [tagged_min, tagged_max]}}."""
+        dir -> {rel_dir: {col: [tagged_min, tagged_max]}}; grouped by the
+        layout column, or one global group for the unpartitioned
+        ``vdir``."""
         pcol = self._pcol
         path = str(self.root / vdir)
         df = self.spark.read.option("basePath", path).parquet(path)
         cols = [c for c in self.config.stats_columns if c in df.columns]
         if not cols:
             return {}
-        aggs = []
-        for c in cols:
-            aggs.append(F.min(c).alias(f"__mn_{c}"))
-            aggs.append(F.max(c).alias(f"__mx_{c}"))
-        out: dict[str, dict[str, list]] = {}
-        if pcol is not None and pcol in df.columns:
-            for r in df.groupBy(pcol).agg(*aggs).collect():
-                rel = f"{vdir}/{_pdir(pcol, r[pcol])}"
-                out[rel] = {
-                    c: [_enc_stat(r[f"__mn_{c}"]), _enc_stat(r[f"__mx_{c}"])]
-                    for c in cols
-                }
-        else:
-            r = df.agg(*aggs).collect()[0]
-            out[vdir] = {
+        keys = [pcol] if pcol in df.columns else []
+        aggs = [a for c in cols for a in (F.min(c).alias(f"__mn_{c}"),
+                                          F.max(c).alias(f"__mx_{c}"))]
+        return {
+            f"{vdir}/{_pdir(pcol, r[pcol])}" if keys else vdir: {
                 c: [_enc_stat(r[f"__mn_{c}"]), _enc_stat(r[f"__mx_{c}"])]
                 for c in cols
             }
-        return out
-
-    def _next_version(self) -> int:
-        c = self.latest_commit()
-        return (c.version + 1) if c else 1
-
-    def _scan_partition_dirs(self, vdir: str) -> dict[str, str]:
-        """Map hive-style partition dirs written under a version dir. A
-        write of zero rows makes none, and maps none: an empty
-        partitioned table has no partitions (never the unpartitioned
-        ``""`` key, which a partitioned handle refuses)."""
-        base = self.root / vdir
-        return {
-            child.name: f"{vdir}/{child.name}"
-            for child in sorted(base.iterdir())
-            if child.is_dir() and "=" in child.name
+            for r in df.groupBy(*keys).agg(*aggs).collect()
         }
+
+    @staticmethod
+    def _next_version(prev: Commit | None) -> int:
+        return (prev.version + 1) if prev else 1
 
 
 def _overlay(data: dict[str, str], touched: list[str],

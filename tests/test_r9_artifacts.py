@@ -77,6 +77,23 @@ def test_top_deg_meta_matches_sql_rule(spark, sf_smoke):
     _same(a, b)
 
 
+def test_seeded_graph_ops_on_empty_lineitem(spark, sf_smoke):
+    """An empty degree relation gives no seeds and max degree 0, and the
+    two seeded operators built on them (q255 k-hop, q264 PPR) return no
+    rows, as their oracle texts do."""
+    li = "__r9_empty_lineitem"
+    entry._t(spark, sf_smoke, "lineitem").limit(0).createOrReplaceTempView(li)
+    assert fn_comp.top_deg_meta(spark, li) == ([], 0)
+    assert fn_comp.khop_reachability(spark, li).count() == 0
+    sym, deg = fn_comp.copurchase_sym_deg(spark, li)
+    sym.createOrReplaceTempView("__r9_empty_sym")
+    deg.createOrReplaceTempView("__r9_empty_deg")
+    ppr = spark.sql(fn_comp.ppr_sql(
+        "spark", sym_table="__r9_empty_sym", deg_table="__r9_empty_deg",
+        seed_values=[], max_d=0))
+    assert ppr.count() == 0
+
+
 def test_weighted_percentile_spark_dialect_matches_shared_text(
     spark, sf_smoke
 ):
