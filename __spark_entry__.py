@@ -585,15 +585,6 @@ def q18_exact_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     return fn_text.exact_dedup_groups(_t(spark, sf_dir, "documents"))
 
 
-def _tokhash(spark: SparkSession, sf_dir: str) -> str:
-    """Shared persisted (doc_id, pos, h) token-hash view — computed once
-    per process and reused by every shingle-based operator (q19/q20/q21/
-    q77): the materialize-the-index-once pattern, not per-query rework."""
-    return fn_dedup.tokhash_view(
-        spark, _t(spark, sf_dir, "documents"), cache_key=sf_dir
-    )
-
-
 def _inv(spark: SparkSession, sf_dir: str) -> tuple[str, str]:
     """Shared persisted shingle inverted index (inv, sizes) views —
     df-capped at dedup.DEDUP_MAX_DF, the pair-producing family's

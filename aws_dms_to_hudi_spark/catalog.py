@@ -5,10 +5,9 @@ Hive sync (``handler.py:78-80,118,142``; Glue factory
 ``src/stepfunctions/emr1.json:79-101``) so engines can query by name.
 
 The Spark-native engine keeps a JSON catalog of table -> {path, keys,
-partitioning, schema} and can project it into the live SparkSession as
-temp views (the local equivalent of metastore registration; on a cluster
-with a metastore the same info feeds ``CREATE TABLE ... USING PARQUET
-LOCATION ...``).
+partitioning, schema}, the schema taken from the table's latest commit,
+and projects each table into Spark's metastore as an external table
+(``CREATE TABLE ... USING PARQUET LOCATION ...``, ``sync_metastore``).
 """
 
 from __future__ import annotations
@@ -104,7 +103,7 @@ class Catalog:
         commit = t.latest_commit()
         if commit is None:
             return None
-        schema = t.read().schema
+        schema = t.table_schema(commit)
         pcol = t.config.partition_path if t.config.is_partitioned else None
         qname = f"{database}.{table_name}"
         cols = ", ".join(
@@ -152,14 +151,3 @@ class Catalog:
             if q is not None:
                 out.append(q)
         return out
-
-    def register_spark_views(self, spark: SparkSession, engine: Any) -> list[str]:
-        """Expose every cataloged table as a Spark temp view of its
-        latest snapshot (query-by-name parity with Glue/Hive sync)."""
-        names = []
-        for name in self._load():
-            df = engine.read_table(name)
-            if df is not None:
-                df.createOrReplaceTempView(name)
-                names.append(name)
-        return names

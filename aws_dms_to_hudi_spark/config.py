@@ -308,8 +308,3 @@ def load_configs(path: str | Path, pipeline_type: str) -> EngineConfigs:
     """Read config items from a JSON file (the engine's 'DynamoDB')."""
     items = json.loads(Path(path).read_text())
     return munge_configs(items, pipeline_type)
-
-
-def write_configs(items: list[dict[str, Any]], path: str | Path) -> None:
-    """Config writer (C12, ``deploy_pipeline_configs/handler.py:13-21``)."""
-    Path(path).write_text(json.dumps(items, indent=2))

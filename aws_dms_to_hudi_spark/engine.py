@@ -218,12 +218,13 @@ class Engine:
             table.clean(RETAINED_COMMITS)
             table.archive(KEEP_MIN_COMMITS, KEEP_MAX_COMMITS)
 
+        # the table's columns: a column the batch dropped stays in it
         self.catalog.sync(
             plan.table_name,
             plan.target_root,
             plan.config.record_key,
             plan.config.partition_path,
-            batch.schema.json(),
+            table.table_schema(commit).json(),
         )
         return commit.version
 

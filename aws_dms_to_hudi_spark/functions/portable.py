@@ -62,12 +62,6 @@ def size(lst: str, dialect: str) -> str:
     return f"size({lst})" if dialect == "spark" else f"len({lst})"
 
 
-def distinct(lst: str, dialect: str) -> str:
-    _check(dialect)
-    fn = "array_distinct" if dialect == "spark" else "list_distinct"
-    return f"{fn}({lst})"
-
-
 def element(lst: str, idx: str, dialect: str) -> str:
     """1-based element access (both engines are 1-based)."""
     _check(dialect)
@@ -167,14 +161,6 @@ def shingles(toks: str, n: int, dialect: str) -> str:
     return transform(seq, "i", f"concat_ws(' ', {join_parts})", dialect)
 
 
-def shingle_hashes(col: str, n: int, dialect: str) -> str:
-    """Distinct rolling-hashes of the n-token shingles of a text column —
-    the set representation used by Jaccard / MinHash."""
-    sh = shingles(tokens(col, dialect), n, dialect)
-    hashed = transform(sh, "s", rolling_hash("s", dialect), dialect)
-    return distinct(hashed, dialect)
-
-
 # ---------------------------------------------------------------------------
 # float folds (bit-identical across engines: fixed order, DOUBLE width)
 # ---------------------------------------------------------------------------
@@ -194,12 +180,3 @@ def dot(a: str, b: str, dim: int, dialect: str) -> str:
 
 def norm(a: str, dim: int, dialect: str) -> str:
     return f"sqrt({dot(a, a, dim, dialect)})"
-
-
-def cosine(a: str, b: str, dim: int, dialect: str) -> str:
-    """Cosine similarity in DOUBLE; NULL-safe only for nonzero norms (the
-    fixture embeddings are nonzero by construction)."""
-    return (
-        f"({dot(a, b, dim, dialect)} / "
-        f"({norm(a, dim, dialect)} * {norm(b, dim, dialect)}))"
-    )

@@ -146,10 +146,6 @@ def bucket_expr(
     )
 
 
-def _cos(a: str, b: str, dialect: str) -> str:
-    return P.cosine(a, b, DIM, dialect)
-
-
 def _normed_cte(dialect: str, table: str, name: str = "normed") -> str:
     """``(vec_id, embedding, nrm)`` — the L2 norm computed ONCE per
     vector. Scoring stages divide the pair dot product by the two

@@ -42,6 +42,7 @@ __all__ = [
     "widen_type",
     "evolved_schema",
     "align_to",
+    "common_schema",
 ]
 
 
@@ -151,15 +152,22 @@ def align_to(df: DataFrame, schema: StructType) -> DataFrame:
     return df.select(*cols)
 
 
+def common_schema(schemas: list[StructType]) -> StructType:
+    """The evolved schema of ``schemas`` taken in order: the first's
+    fields, then each later one's new fields appended."""
+    target = schemas[0]
+    for other in schemas[1:]:
+        target = evolved_schema(target, other)
+    return target
+
+
 def reconcile(frames: list[DataFrame]) -> list[DataFrame]:
     """Align a set of frames (e.g. per-version snapshot dirs) onto their
     common evolved schema. Identity (no projection inserted) when all
     schemas already match."""
     if len(frames) <= 1:
         return frames
-    target = frames[0].schema
-    for other in frames[1:]:
-        target = evolved_schema(target, other.schema)
+    target = common_schema([f.schema for f in frames])
     return [
         f if f.schema == target else align_to(f, target) for f in frames
     ]

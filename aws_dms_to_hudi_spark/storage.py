@@ -19,7 +19,9 @@ Commit manifest fields::
               (unpartitioned: {"": "v00000003"}),
      "deltas": ["v00000004_delta", ...],     # MOR only
      "checkpoint": {...},                     # source position (D2)
-     "ts": "..."}
+     "ts": "...",
+     "schema": "<Spark schema JSON>",         # what the data map reads as
+     "dir_schemas": [{"schema": "<JSON>", "dirs": ["v00000002", ...]}]}
 
 Crash safety (SURVEY.md §7.3): data dirs are written first, the manifest
 rename is the commit point, and the manifest carries the source checkpoint —
@@ -61,7 +63,7 @@ import json
 import os
 import shutil
 import tempfile
-from dataclasses import dataclass, field
+from dataclasses import asdict, dataclass, field, fields
 from pathlib import Path
 from typing import Any
 
@@ -77,7 +79,10 @@ from aws_dms_to_hudi_spark.operators.merge import (
     precombine,
     upsert_merge,
 )
-from aws_dms_to_hudi_spark.operators.schema_evolution import reconcile
+from aws_dms_to_hudi_spark.operators.schema_evolution import (
+    common_schema,
+    reconcile,
+)
 
 COMMITS_DIR = "_commits"
 ARCHIVE_FILE = "_archived.json"
@@ -123,10 +128,24 @@ class Commit:
     # manifests written before the field existed; those resolve as
     # "older than any stamped commit".
     ts: float | None = None
-    # Spark schema JSON of a snapshot that maps no data dir: a
-    # partitioned write of zero rows makes no partition dir, so no file
-    # footer describes the table. None whenever ``data`` is non-empty.
+    # Spark schema JSON of the snapshot ``data`` reads as, also when it
+    # maps no dir (Hudi keeps the writer schema in each commit, never
+    # infers it from files). None on manifests older than the field.
     schema: str | None = None
+    # Schema JSON of each dir group (``_group_of``) the commit references
+    # whose schema is not ``schema`` (pre-evolution data, changelogs,
+    # deltas...), carried forward by identity as ``col_stats`` is. None on
+    # manifests written before the field: their dirs are footer-inferred.
+    dir_schemas: dict[str, str] | None = None
+
+    def schema_of(self, rel: str) -> str | None:
+        """Recorded schema JSON of the dir (or dir group) ``rel``."""
+        if self.dir_schemas is None:
+            return None
+        return self.dir_schemas.get(_group_of(rel), self.schema)
+
+    def schemas_of(self, rels) -> dict[str, str | None]:
+        return {d: self.schema_of(d) for d in rels}
 
     def dirs(self) -> list[str]:
         """Every dir this commit references: data, MOR deltas,
@@ -136,43 +155,21 @@ class Commit:
                 *self.dv, *extra]
 
     def to_json(self) -> str:
-        return json.dumps(
-            {
-                "version": self.version,
-                "operation": self.operation,
-                "data": self.data,
-                "deltas": self.deltas,
-                "checkpoint": self.checkpoint,
-                "parent": self.parent,
-                "changelog": self.changelog,
-                "key_bounds": self.key_bounds,
-                "col_stats": self.col_stats,
-                "cdc_dir": self.cdc_dir,
-                "dv": self.dv,
-                "ts": self.ts,
-                "schema": self.schema,
-            },
-            indent=1,
-        )
+        d = asdict(self)
+        if self.dir_schemas is not None:  # each distinct text once
+            d["dir_schemas"] = [
+                {"schema": t, "dirs": [g for g, u in self.dir_schemas.items()
+                                       if u == t]}
+                for t in dict.fromkeys(self.dir_schemas.values())]
+        return json.dumps(d, indent=1)
 
     @classmethod
     def from_json(cls, text: str) -> "Commit":
         d = json.loads(text)
-        return cls(
-            version=d["version"],
-            operation=d["operation"],
-            data=d["data"],
-            deltas=d.get("deltas", []),
-            checkpoint=d.get("checkpoint", {}),
-            parent=d.get("parent"),
-            changelog=d.get("changelog", []),
-            key_bounds=d.get("key_bounds"),
-            col_stats=d.get("col_stats"),
-            cdc_dir=d.get("cdc_dir"),
-            dv=d.get("dv", []),
-            ts=d.get("ts"),
-            schema=d.get("schema"),
-        )
+        if d.get("dir_schemas") is not None:
+            d["dir_schemas"] = {g: e["schema"] for e in d["dir_schemas"]
+                                for g in e["dirs"]}
+        return cls(**{f.name: d[f.name] for f in fields(cls) if f.name in d})
 
 
 BUCKET_COL = "__bucket"
@@ -305,6 +302,8 @@ class StagedCommit:
     touched: list[str]  # partition KEYS this writer rewrote
     fresh: dict[str, str]  # partition key -> new rel dir
     changelog: list[str]
+    schema: str  # of the staged snapshot, also when ``fresh`` is empty
+    dir_schemas: dict[str, str]  # dir group written -> its schema JSON
     col_stats: dict[str, dict[str, list]] | None = None
 
 
@@ -557,17 +556,13 @@ class CuratedTable:
         commit = self._commit_at(version)
         if commit is None:
             return None
-        if filters and commit.data and (read_optimized or not commit.deltas):
+        rel_dirs = list(commit.data.values())
+        if filters and rel_dirs and (read_optimized or not commit.deltas):
             rel_dirs = self._prune_stats_dirs(commit, filters)
-            base = (
-                self._read_dirs(rel_dirs) if rel_dirs
-                # every dir proven empty: typed empty result
-                else self._typed_empty(commit)
-            )
-        else:
-            base = self._snapshot(commit)
+        # every dir pruned, or none mapped: the typed empty snapshot
+        base = self._read_dirs(commit.schemas_of(rel_dirs), commit.schema)
         if commit.deltas and not read_optimized:
-            deltas = self._read_dirs(commit.deltas)
+            deltas = self._read_dirs(commit.schemas_of(commit.deltas))
             base = upsert_merge(
                 base,
                 deltas,
@@ -672,18 +667,15 @@ class CuratedTable:
                 )
         return df
 
-    def _snapshot(self, commit: Commit) -> DataFrame | None:
-        """Rows of every data dir ``commit`` maps, or, when it maps none,
-        a typed empty frame from ``Commit.schema``."""
-        if not commit.data and commit.schema:
-            return self.spark.createDataFrame(
-                [], StructType.fromJson(json.loads(commit.schema)))
-        return self._read_dirs(list(commit.data.values()))
-
-    def _typed_empty(self, commit: Commit) -> DataFrame | None:
-        snap = self._snapshot(commit)
-        return None if snap is None else self.spark.createDataFrame(
-            [], snap.schema)
+    def table_schema(self, commit: Commit | None = None) -> StructType:
+        """Columns of ``commit``'s (default: the latest) base snapshot, as
+        ``read(read_optimized=True)`` returns them; no file is read."""
+        commit = commit or self.latest_commit()
+        if commit.schema is None:  # written before schemas were recorded
+            return self.read(commit.version, read_optimized=True).schema
+        return StructType([f for f in _struct(commit.schema).fields
+                           if f.name not in (BUCKET_COL, RANGE_COL,
+                                             LINEAGE_COL)])
 
     def _prune_stats_dirs(
         self, commit: Commit, filters: list[tuple[str, str, Any]]
@@ -716,10 +708,11 @@ class CuratedTable:
         than ``cleaner.commits.retained`` require a full refresh, exactly
         as in Hudi.
         """
-        df = self._read_dirs([
-            d for c in self._data_commits(begin_version, end_version)
+        df = self._read_dirs({
+            d: c.schema_of(d)
+            for c in self._data_commits(begin_version, end_version)
             for d in c.changelog
-        ])
+        })
         if df is None:
             return None
         df = precombine(
@@ -750,58 +743,37 @@ class CuratedTable:
                 return c
         raise ValueError(f"version {version} not on timeline (cleaned?)")
 
-    def _read_dirs(self, rel_dirs: list[str]) -> DataFrame | None:
-        if not rel_dirs:
-            return None
-        paths = [str(self.root / d) for d in rel_dirs]
-        reader = self.spark.read
-        # The layout is self-describing: hive-style partition dirs carry
-        # a `col=value` leaf. Branching on the DIRS rather than the
-        # configured partition column keeps reads correct across
-        # partition evolution (a version written under an older spec
-        # parses its own partition column from its own dir names) and
-        # sends plain dirs (MOR deltas, changelogs) down the simple
-        # multi-path scan.
-        if any("=" in d.rsplit("/", 1)[-1] for d in rel_dirs):
-            # basePath keeps hive-style partition columns when reading
-            # individual partition dirs.
-            reader = reader.option("basePath", str(self.root / _version_of(rel_dirs[0])))
-            # Partition dirs from different versions need per-version
-            # reads. Bootstrap entries are absolute external dirs: they
-            # group under the SOURCE root as basePath (and pathlib's
-            # absolute-wins join below resolves them untouched).
-            by_version: dict[str, list[str]] = {}
-            for d in rel_dirs:
-                base = _ext_base(d) if _is_external(d) else _version_of(d)
-                by_version.setdefault(base, []).append(str(self.root / d))
-            dfs = []
-            for ver, ps in by_version.items():
-                dfs.append(
-                    self.spark.read.option("basePath", str(self.root / ver)).parquet(*ps)
-                )
-            # Carried-forward partition dirs may predate a schema
-            # evolution — widen/NULL-fill them onto the common schema
-            # (identity when nothing evolved).
-            dfs = reconcile(dfs)
-            df = dfs[0]
-            for other in dfs[1:]:
-                df = df.unionByName(other, allowMissingColumns=True)
-            return df
-        if len(paths) > 1:
-            # MOR delta dirs / changelog dirs span commits, so they can
-            # span a schema evolution; a single multi-path scan would
-            # silently impose the first footer's schema. Keep the
-            # one-scan plan when schemas agree, else per-dir scans
-            # reconciled onto the evolved schema (dir count is bounded
-            # by the compaction interval).
-            dfs = [self.spark.read.parquet(p) for p in paths]
-            if any(d.schema != dfs[0].schema for d in dfs[1:]):
-                dfs = reconcile(dfs)
-                df = dfs[0]
-                for other in dfs[1:]:
-                    df = df.unionByName(other)
-                return df
-        return reader.parquet(*paths)
+    def _read_dirs(self, dirs: dict[str, str | None],
+                   empty: str | None = None) -> DataFrame | None:
+        """Rows of ``dirs`` (rel dir -> recorded schema JSON): one scan per
+        dir group and schema, under the schema the files were written
+        with, then reconciled onto the groups' common schema (Spark's
+        reader cannot read long as double or date as timestamp itself).
+        No dir: an empty frame of schema ``empty``, or None. Hive-style
+        dirs are read under their version dir as basePath (an external
+        dir under its source root), so each parses its own partition spec."""
+        if not dirs:
+            return None if empty is None else self.spark.createDataFrame(
+                [], _struct(empty))
+        groups: dict[tuple, list[str]] = {}
+        for d, schema in dirs.items():
+            base = _group_of(d) if "=" in d.rsplit("/", 1)[-1] else None
+            # a plain dir without a recorded schema is inferred on its own
+            alone = None if schema or base else d
+            groups.setdefault((base, schema, alone), []).append(
+                str(self.root / d))
+        dfs = []
+        for (base, schema, _), paths in groups.items():
+            reader = self.spark.read
+            if base is not None:
+                reader = reader.option("basePath", str(self.root / base))
+            dfs.append(reader.schema(_struct(schema)).parquet(*paths)
+                       if schema else _footer_read(reader, paths))
+        dfs = reconcile(dfs)
+        df = dfs[0]
+        for other in dfs[1:]:
+            df = df.unionByName(other, allowMissingColumns=True)
+        return df
 
     # ---------- write path ----------
 
@@ -843,27 +815,53 @@ class CuratedTable:
         return df.repartitionByRange(n, pcol, *sort_cols)
 
     def _write_snapshot(self, df: DataFrame, vdir: str,
-                        sort_cols: list[str]) -> dict[str, str]:
+                        sort_cols: list[str]) -> tuple[dict[str, str], str]:
         """Write ``df`` as snapshot dir ``vdir``, each task sorted by
         (layout column, ``sort_cols``), clustering's curve column
-        dropped; returns the data map of the dirs written. An
-        unpartitioned table is the one-partition case, ``{"": vdir}``
-        (Hudi's non-partitioned key generator). A partitioned write of
-        zero rows makes no partition dir and maps none — never the
-        unpartitioned ``""`` key, which a partitioned handle refuses."""
+        dropped; returns the data map of the dirs written and the schema
+        JSON they read back with. An unpartitioned table is the
+        one-partition case, ``{"": vdir}`` (Hudi's non-partitioned key
+        generator). A partitioned write of zero rows makes no partition
+        dir and maps none — never the unpartitioned ``""`` key, which a
+        partitioned handle refuses."""
         pcol = self._pcol
         cols = [pcol, *sort_cols] if pcol else list(sort_cols)
         out = df.sortWithinPartitions(*cols).drop(ZORDER_COL)
         base = self.root / vdir
         if pcol is None:
             out.write.mode("overwrite").parquet(str(base))
-            return {"": vdir}
+            return {"": vdir}, _written_schema(out)
         out.write.mode("overwrite").partitionBy(pcol).parquet(str(base))
         return {
             child.name: f"{vdir}/{child.name}"
             for child in sorted(base.iterdir())
             if child.is_dir() and "=" in child.name
-        }
+        }, _written_schema(out, pcol)
+
+    def _recorded(self, commit: Commit, carried: Commit | None,
+                  written: dict[str, str]) -> Commit:
+        """``commit`` with its schemas: each dir group's from ``written``
+        (this write's groups) or else ``carried`` (inferred once if its
+        manifest predates them); ``schema`` is the data groups' common
+        schema, or with none the caller's, else ``carried``'s."""
+        groups: dict[str, str] = {}
+        for d in commit.dirs():
+            g = _group_of(d)
+            if g not in groups:
+                groups[g] = (
+                    written.get(g) or (carried and carried.schema_of(g))
+                    or self._read_dirs({x: None for x in commit.dirs()
+                                        if _group_of(x) == g}).schema.json()
+                )
+        data = dict.fromkeys(groups[_group_of(d)]
+                             for d in commit.data.values())
+        if data:
+            commit.schema = common_schema([_struct(t) for t in data]).json()
+        elif commit.schema is None and carried is not None:
+            commit.schema = carried.schema
+        commit.dir_schemas = {g: t for g, t in groups.items()
+                              if t != commit.schema}
+        return commit
 
     def bootstrap(
         self, source_dir: str, checkpoint: dict[str, Any] | None = None
@@ -939,7 +937,7 @@ class CuratedTable:
                     "a hive partition dir; rename the source directory"
                 )
             data = {"": str(src)}
-        df = self._read_dirs(list(data.values()))
+        df = self._read_dirs(dict.fromkeys(data.values()))
         missing = [
             c for c in [*cfg.record_key, cfg.source_ordering_field]
             if c not in df.columns
@@ -966,6 +964,9 @@ class CuratedTable:
             # does) — incremental readers see the full initial load
             changelog=list(data.values()),
             key_bounds=self._commit_key_bounds(prev),
+            # inferred once, here: the source files are not the engine's
+            schema=df.schema.json(),
+            dir_schemas={},
         )
         self._write_commit(commit)
         return commit
@@ -988,11 +989,11 @@ class CuratedTable:
         df = precombine(df, cfg.record_key, cfg.source_ordering_field)
         df = self._bucketize(apply_deletes(df), prev)
         keys = list(cfg.record_key)
-        data = self._write_snapshot(self._layout_exchange(df, keys), vdir,
-                                    keys)
+        data, schema = self._write_snapshot(self._layout_exchange(df, keys),
+                                            vdir, keys)
         self._update_record_index(df)
         self._update_secondary_index(df)
-        commit = Commit(
+        commit = self._recorded(Commit(
             version=version,
             operation="bulk_insert",
             data=data,
@@ -1002,9 +1003,9 @@ class CuratedTable:
             # dirs rather than writing the batch twice
             changelog=list(data.values()),
             key_bounds=self._commit_key_bounds(prev),
-            col_stats=self._assemble_stats(None, data, vdir),
-            schema=None if data else df.schema.json(),
-        )
+            col_stats=self._assemble_stats(None, data, vdir, schema),
+            schema=schema,
+        ), None, {vdir: schema})
         self._write_commit(commit)
         return commit
 
@@ -1107,9 +1108,9 @@ class CuratedTable:
         version = self._next_version(prev)
         vdir = f"v{version:08d}"
         keys = list(cfg.record_key)
-        data = newt._write_snapshot(newt._layout_exchange(df, keys), vdir,
-                                    keys)
-        commit = Commit(
+        data, schema = newt._write_snapshot(newt._layout_exchange(df, keys),
+                                            vdir, keys)
+        commit = newt._recorded(Commit(
             version=version,
             operation="evolve_partitioning",
             data=data,
@@ -1118,10 +1119,10 @@ class CuratedTable:
             parent=prev.version,
             changelog=[],  # a rewrite changes no rows
             key_bounds=newt._commit_key_bounds(prev),
-            col_stats=newt._assemble_stats(None, data, vdir),
+            col_stats=newt._assemble_stats(None, data, vdir, schema),
             dv=[],  # materialized by the rewrite, like clustering
-            schema=None if data else df.schema.json(),
-        )
+            schema=schema,
+        ), prev, {vdir: schema})
         newt._write_commit(commit)
         if cfg.record_index:
             # dir keys carry the spec: rebuild or point_lookup would
@@ -1192,6 +1193,8 @@ class CuratedTable:
                 if src.col_stats else None
             ),
             schema=src.schema,
+            dir_schemas=None if src.dir_schemas is None else {
+                _abs(g): t for g, t in src.dir_schemas.items()},
         )
         clone._write_commit(commit)
         return clone
@@ -1349,13 +1352,14 @@ class CuratedTable:
 
         vdir = f"v{version:08d}"
         cldir = f"{vdir}_changelog"
-        batch, touched = self._write_changelog(
+        batch, touched, cl_schema = self._write_changelog(
             self._stamp_lineage(batch, version), cldir, prev
         )
         cdcdir = f"{vdir}_cdcbefore" if cfg.cdc_images else None
-        fresh, merged = self._merge_touched(prev, batch, touched, vdir, cdcdir)
+        fresh, written = self._merge_touched(prev, batch, touched, vdir,
+                                             cdcdir)
         new_data = _overlay(prev.data, touched, fresh)
-        commit = Commit(
+        commit = self._recorded(Commit(
             version=version,
             operation="upsert",
             data=new_data,
@@ -1363,11 +1367,12 @@ class CuratedTable:
             parent=prev.version,
             changelog=[cldir],
             key_bounds=self._commit_key_bounds(prev),
-            col_stats=self._assemble_stats(prev, new_data, vdir),
+            col_stats=self._assemble_stats(prev, new_data, vdir,
+                                           written[vdir]),
             cdc_dir=cdcdir,
             dv=list(prev.dv),
-            schema=None if new_data else merged.schema.json(),
-        )
+            schema=written[vdir],
+        ), prev, {cldir: cl_schema, **written})
         self._update_record_index(batch)
         self._update_secondary_index(batch)
         self._write_commit(commit)
@@ -1375,12 +1380,13 @@ class CuratedTable:
 
     def _write_changelog(
         self, batch: DataFrame, cldir: str, prev: Commit
-    ) -> tuple[DataFrame, list[str]]:
+    ) -> tuple[DataFrame, list[str], str]:
         """Write the precombined change set (Hudi CDC analog; it feeds
         incremental reads) and read it back with the schema just written,
         which keeps the merge plan small. Also returns the data-map keys
-        the batch touches: the partition keys the write observed, or
-        ``[""]``, the one partition of an unpartitioned table."""
+        the batch touches — the partition keys the write observed, or
+        ``[""]``, the one partition of an unpartitioned table — and the
+        changelog's schema JSON."""
         cfg = self.config
         pcol = self._pcol
         out = precombine(batch, cfg.record_key, cfg.source_ordering_field)
@@ -1393,14 +1399,14 @@ class CuratedTable:
             out = out.observe(obs, F.collect_set(v).alias("values"),
                               F.bool_or(v.isNull()).alias("has_null"))
         out.write.mode("overwrite").parquet(str(self.root / cldir))
-        back = self.spark.read.schema(out.schema).parquet(
-            str(self.root / cldir)
-        )
+        schema = _written_schema(out)
+        back = self._read_dirs({cldir: schema})
         if pcol is None:
-            return back, [""]
+            return back, [""], schema
         m = obs.get
         values = [*m["values"], *([None] if m["has_null"] else [])]
-        return self._bucketize(back, prev), [_pdir(pcol, v) for v in values]
+        return (self._bucketize(back, prev), [_pdir(pcol, v) for v in values],
+                schema)
 
     def _merge_touched(
         self,
@@ -1409,9 +1415,10 @@ class CuratedTable:
         touched: list[str],
         vdir: str,
         cdcdir: str | None = None,
-    ) -> tuple[dict[str, str], DataFrame]:
+    ) -> tuple[dict[str, str], dict[str, str]]:
         """Merge ``batch`` into the ``touched`` partitions' rows, write them
-        under ``vdir``; returns (partition dirs written, merged frame).
+        under ``vdir``; returns (partition dirs written, schema JSON of each
+        dir group written: ``vdir`` and the CDC before-image dir).
         The merge key is (layout value, record key) — Hudi's non-global
         index — so the layout's range exchange also serves the winner
         window: one exchange, and one sort that orders the files too. An
@@ -1420,19 +1427,21 @@ class CuratedTable:
         cfg = self.config
         keys = list(cfg.record_key)
         mkey = [self._pcol, *keys] if self._pcol else keys
-        existing = self._read_dirs(
-            [prev.data[k] for k in touched if k in prev.data]
-        )
+        existing = self._read_dirs(prev.schemas_of(
+            prev.data[k] for k in touched if k in prev.data))
         # deleted rows must not re-merge back from the old dir
         existing = self._apply_dv(prev, existing)
+        written = {}
         if cdcdir:
-            self._write_cdc_before(existing, batch, cdcdir, mkey)
+            written[cdcdir] = self._write_cdc_before(existing, batch, cdcdir,
+                                                     mkey)
         merged = _pick_winners(
             self._layout_exchange(_union_tagged(existing, batch), keys),
             mkey,
             cfg.source_ordering_field,
         )
-        return self._write_snapshot(merged, vdir, keys), merged
+        fresh, written[vdir] = self._write_snapshot(merged, vdir, keys)
+        return fresh, written
 
     # ---------- deletion vectors (Delta Lake DV analog) ----------
 
@@ -1467,9 +1476,7 @@ class CuratedTable:
         side; the dir mapping is a broadcast of the manifest."""
         if df is None or not commit.dv:
             return df
-        dvd = self._read_dirs(commit.dv)
-        if dvd is None:
-            return df
+        dvd = self._read_dirs(commit.schemas_of(commit.dv))
         rows = df.withColumn(DIR_KEY_COL, self._dir_key_expr()).join(
             F.broadcast(self._dir_map_df(commit)), DIR_KEY_COL
         )
@@ -1509,7 +1516,8 @@ class CuratedTable:
         version = self._next_version(prev)
         dvdir = f"v{version:08d}_dv"
         kcols = list(cfg.record_key)
-        snap = self._apply_dv(prev, self._snapshot(prev))  # no dup deletes
+        snap = self._apply_dv(prev, self._read_dirs(  # no dup deletes
+            prev.schemas_of(prev.data.values()), prev.schema))
         doomed = (
             snap.join(
                 F.broadcast(keys.select(*kcols).distinct()), kcols, "left_semi"
@@ -1520,7 +1528,7 @@ class CuratedTable:
             .distinct()
         )
         doomed.write.mode("overwrite").parquet(str(self.root / dvdir))
-        commit = Commit(
+        commit = self._recorded(Commit(
             version=version,
             operation="delete_vector",
             data=dict(prev.data),
@@ -1531,8 +1539,7 @@ class CuratedTable:
             key_bounds=self._commit_key_bounds(prev),
             col_stats=prev.col_stats,
             dv=[*prev.dv, dvdir],
-            schema=prev.schema,
-        )
+        ), prev, {dvdir: _written_schema(doomed)})
         self._write_commit(commit)
         return commit
 
@@ -1612,12 +1619,12 @@ class CuratedTable:
         ]
         batch = apply_deletes(batch)
         keys = list(cfg.record_key)
-        fresh = self._write_snapshot(self._layout_exchange(batch, keys), vdir,
-                                     keys)
+        fresh, schema = self._write_snapshot(
+            self._layout_exchange(batch, keys), vdir, keys)
         new_data = _overlay(prev.data, touched, fresh)
         self._update_record_index(batch)
         self._update_secondary_index(batch)
-        commit = Commit(
+        commit = self._recorded(Commit(
             version=version,
             operation="insert_overwrite",
             data=new_data,
@@ -1625,10 +1632,10 @@ class CuratedTable:
             parent=prev.version,
             changelog=list(fresh.values()),
             key_bounds=self._commit_key_bounds(prev),
-            col_stats=self._assemble_stats(prev, new_data, vdir),
+            col_stats=self._assemble_stats(prev, new_data, vdir, schema),
             dv=list(prev.dv),
-            schema=None if new_data else batch.schema.json(),
-        )
+            schema=schema,
+        ), prev, {vdir: schema})
         self._write_commit(commit)
         return commit
 
@@ -1680,7 +1687,7 @@ class CuratedTable:
         # clustering never invalidate them
         self._update_record_index(self._bucketize(deduped, prev))
         self._update_secondary_index(self._bucketize(deduped, prev))
-        commit = Commit(
+        commit = self._recorded(Commit(
             version=version,
             operation="delta_commit",
             data=dict(prev.data),
@@ -1693,8 +1700,7 @@ class CuratedTable:
             # base dirs unchanged; deltas carry no stats (pruning is
             # disabled while deltas are outstanding anyway)
             col_stats=prev.col_stats,
-            schema=prev.schema,
-        )
+        ), prev, {ddir: _written_schema(deduped)})
         self._write_commit(commit)
         return commit
 
@@ -1710,10 +1716,10 @@ class CuratedTable:
         version = self._next_version(prev)
         vdir = f"v{version:08d}"
         keys = list(self.config.record_key)
-        data = self._write_snapshot(
+        data, schema = self._write_snapshot(
             self._layout_exchange(self._bucketize(merged, prev), keys), vdir,
             keys)
-        commit = Commit(
+        commit = self._recorded(Commit(
             version=version,
             operation="compaction",
             data=data,
@@ -1721,9 +1727,9 @@ class CuratedTable:
             checkpoint=prev.checkpoint,
             parent=prev.version,
             key_bounds=self._commit_key_bounds(prev),
-            col_stats=self._assemble_stats(prev, data, vdir),
-            schema=None if data else merged.schema.json(),
-        )
+            col_stats=self._assemble_stats(prev, data, vdir, schema),
+            schema=schema,
+        ), prev, {vdir: schema})
         self._write_commit(commit)
         return commit
 
@@ -1832,8 +1838,8 @@ class CuratedTable:
                 1, self.spark.sparkContext.defaultParallelism // 4
             )
             df = df.repartitionByRange(n, *sort_cols)
-        data = self._write_snapshot(df, vdir, sort_cols)
-        commit = Commit(
+        data, schema = self._write_snapshot(df, vdir, sort_cols)
+        commit = self._recorded(Commit(
             version=version,
             operation="clustering",
             data=data,
@@ -1841,9 +1847,9 @@ class CuratedTable:
             checkpoint=prev.checkpoint,
             parent=prev.version,
             key_bounds=self._commit_key_bounds(prev),
-            col_stats=self._assemble_stats(prev, data, vdir),
-            schema=None if data else df.drop(ZORDER_COL).schema.json(),
-        )
+            col_stats=self._assemble_stats(prev, data, vdir, schema),
+            schema=schema,
+        ), prev, {vdir: schema})
         self._write_commit(commit)
         return commit
 
@@ -1903,7 +1909,7 @@ class CuratedTable:
         if target is None:
             raise ValueError(f"version {version} not on timeline")
         prev = self.latest_commit()
-        commit = Commit(
+        commit = self._recorded(Commit(
             version=self._next_version(prev),
             operation="restore",
             data=dict(target.data),
@@ -1914,8 +1920,7 @@ class CuratedTable:
             key_bounds=self._commit_key_bounds(prev),
             col_stats=target.col_stats,
             dv=list(target.dv),
-            schema=target.schema,
-        )
+        ), target, {})
         self._write_commit(commit)
         if self.config.record_index:
             self._rebuild_record_index(self.read(version=commit.version))
@@ -2094,16 +2099,16 @@ class CuratedTable:
         token = uuid.uuid4().hex[:8]
         vtoken = f"v{prev.version + 1:08d}w{token}"
         cldir = f"{vtoken}_changelog"
-        batch, touched = self._write_changelog(batch, cldir, prev)
-        fresh, _ = self._merge_touched(prev, batch, touched, vtoken)
-        stats = (
-            self._stats_for_vdir(vtoken) if cfg.stats_columns else None
-        )
+        batch, touched, cl_schema = self._write_changelog(batch, cldir, prev)
+        fresh, written = self._merge_touched(prev, batch, touched, vtoken)
+        stats = self._assemble_stats(None, fresh, vtoken, written[vtoken])
         return StagedCommit(
             parent_version=prev.version,
             touched=touched,
             fresh=fresh,
             changelog=[cldir],
+            schema=written[vtoken],
+            dir_schemas={cldir: cl_schema, **written},
             col_stats=stats,
         )
 
@@ -2146,7 +2151,7 @@ class CuratedTable:
                 for rel in new_data.values():
                     if rel not in col_stats and rel in lstats:
                         col_stats[rel] = lstats[rel]
-            commit = Commit(
+            commit = self._recorded(Commit(
                 version=latest.version + 1,
                 operation="upsert",
                 data=new_data,
@@ -2155,9 +2160,8 @@ class CuratedTable:
                 changelog=list(staged.changelog),
                 key_bounds=self._commit_key_bounds(latest),
                 col_stats=col_stats,
-                schema=None if new_data
-                else self._snapshot(latest).schema.json(),
-            )
+                schema=staged.schema,
+            ), latest, staged.dir_schemas)
             self._write_commit(commit, _locked=True)
             return commit
 
@@ -2172,10 +2176,11 @@ class CuratedTable:
         same dir-union read any snapshot costs."""
         parent = self._commit_at(staged.parent_version)
         new_data = _overlay(parent.data, staged.touched, staged.fresh)
-        df = self._read_dirs(list(new_data.values()))
-        if df is not None and (
-            self.config.num_buckets or self.config.key_range_groups
-        ):
+        df = self._read_dirs({
+            d: staged.dir_schemas.get(_group_of(d)) or parent.schema_of(d)
+            for d in new_data.values()
+        }, staged.schema)
+        if self.config.num_buckets or self.config.key_range_groups:
             df = df.drop(BUCKET_COL, RANGE_COL)
         return df
 
@@ -2309,7 +2314,7 @@ class CuratedTable:
                 if k in icommit.data
             ]
             if idirs:
-                hits = index._read_dirs(idirs).join(
+                hits = index._read_dirs(icommit.schemas_of(idirs)).join(
                     F.broadcast(probe), on=on, how="left_semi")
                 dkeys = sorted(
                     r[0] for r in hits.select(DIR_KEY_COL).distinct().collect()
@@ -2326,16 +2331,14 @@ class CuratedTable:
         """Rows of ``rows_dirs`` and of every MOR delta (a delta may carry
         any key) semi-joined to ``probe``, which clears index false
         positives; hidden columns drop, as in read()."""
-        base = self._read_dirs(rows_dirs) if rows_dirs else None
+        base = self._read_dirs(commit.schemas_of(rows_dirs), commit.schema)
         if commit.deltas:
             base = upsert_merge(
                 base,
-                self._read_dirs(commit.deltas),
+                self._read_dirs(commit.schemas_of(commit.deltas)),
                 self.config.record_key,
                 self.config.source_ordering_field,
             )
-        if base is None:
-            base = self._typed_empty(commit)
         return base.join(F.broadcast(probe), on=on, how="left_semi").drop(
             BUCKET_COL, RANGE_COL, LINEAGE_COL
         )
@@ -2482,7 +2485,8 @@ class CuratedTable:
             path = self._bloom_path(rel)
             if path.exists() or not (self.root / rel).exists():
                 continue
-            pos = self._bloom_positions(self._read_dirs([rel])).select(
+            pos = self._bloom_positions(
+                self._read_dirs(commit.schemas_of([rel]))).select(
                 F.explode("pos").alias("pos")
             )
             words = (
@@ -2570,11 +2574,11 @@ class CuratedTable:
         batch: DataFrame,
         cdcdir: str,
         kcols: list[str] | None = None,
-    ) -> None:
+    ) -> str:
         """Persist the stored pre-state of exactly the keys the batch
-        touches (``kcols``: the merge key, default the record key).
-        ``existing`` is already pruned to the touched partitions, so
-        this is one semi-join sized by the batch."""
+        touches (``kcols``: the merge key, default the record key);
+        returns its schema JSON. ``existing`` is already pruned to the
+        touched partitions, so this is one semi-join sized by the batch."""
         kcols = kcols or list(self.config.record_key)
         if existing is None:
             # first write into empty partitions: no before-images
@@ -2586,6 +2590,7 @@ class CuratedTable:
         before.coalesce(1).write.mode("overwrite").parquet(
             str(self.root / cdcdir)
         )
+        return _written_schema(before)
 
     def read_cdc(
         self,
@@ -2616,7 +2621,7 @@ class CuratedTable:
         cols = list(image_cols or [])
         outs: list[DataFrame] = []
         for c in self._data_commits(begin_version, end_version):
-            after = self._read_dirs(c.changelog)
+            after = self._read_dirs(c.schemas_of(c.changelog))
             deleted = (
                 F.coalesce(F.col(DELETED_COL), F.lit(False))
                 if DELETED_COL in after.columns
@@ -2629,7 +2634,7 @@ class CuratedTable:
                 *[F.col(x).alias(f"after_{x}") for x in cols],
             )
             if c.cdc_dir:
-                b = self._read_dirs([c.cdc_dir]).select(
+                b = self._read_dirs(c.schemas_of([c.cdc_dir])).select(
                     *kcols,
                     F.col(ordf).alias("__b_ord"),
                     *[F.col(x).alias(f"before_{x}") for x in cols],
@@ -2681,46 +2686,37 @@ class CuratedTable:
     # ---------- column-stats index maintenance ----------
 
     def _assemble_stats(
-        self, prev: Commit | None, new_data: dict[str, str], vdir: str
+        self, prev: Commit | None, new_data: dict[str, str], vdir: str,
+        schema: str,
     ) -> dict[str, dict[str, list]] | None:
-        """col_stats for a new commit: freshly aggregated for dirs this
-        commit wrote under ``vdir``, copied by rel-dir identity for
-        carried-forward dirs. The fresh aggregation reads back ONLY the
-        just-written dirs and ONLY the stats columns (columnar scan,
-        map-side-combinable min/max) — O(dirs written), never O(table)."""
+        """col_stats for a new commit: copied by rel-dir identity for
+        carried-forward dirs; for the dirs written under ``vdir`` (schema
+        JSON ``schema``), one min/max aggregate grouped by the layout
+        column -> {rel_dir: {col: [tagged_min, tagged_max]}}. It reads
+        back ONLY the just-written dirs and ONLY the stats columns
+        (columnar scan, map-side-combinable min/max) — O(dirs written),
+        never O(table)."""
         if not self.config.stats_columns:
             return None
-        fresh_rels = [r for r in new_data.values() if _version_of(r) == vdir]
-        out: dict[str, dict[str, list]] = {}
         pstats = (prev.col_stats if prev else None) or {}
-        for rel in new_data.values():
-            if _version_of(rel) != vdir and rel in pstats:
-                out[rel] = pstats[rel]
-        if fresh_rels:
-            out.update(self._stats_for_vdir(vdir))
-        return out
-
-    def _stats_for_vdir(self, vdir: str) -> dict[str, dict[str, list]]:
-        """One grouped min/max aggregate over a freshly-written version
-        dir -> {rel_dir: {col: [tagged_min, tagged_max]}}; grouped by the
-        layout column, or one global group for the unpartitioned
-        ``vdir``."""
+        out = {rel: pstats[rel] for rel in new_data.values()
+               if _version_of(rel) != vdir and rel in pstats}
+        if not any(_version_of(rel) == vdir for rel in new_data.values()):
+            return out
         pcol = self._pcol
-        path = str(self.root / vdir)
-        df = self.spark.read.option("basePath", path).parquet(path)
+        df = self._read_dirs({vdir: schema})
         cols = [c for c in self.config.stats_columns if c in df.columns]
         if not cols:
-            return {}
+            return out
         keys = [pcol] if pcol in df.columns else []
         aggs = [a for c in cols for a in (F.min(c).alias(f"__mn_{c}"),
                                           F.max(c).alias(f"__mx_{c}"))]
-        return {
-            f"{vdir}/{_pdir(pcol, r[pcol])}" if keys else vdir: {
+        for r in df.groupBy(*keys).agg(*aggs).collect():
+            out[f"{vdir}/{_pdir(pcol, r[pcol])}" if keys else vdir] = {
                 c: [_enc_stat(r[f"__mn_{c}"]), _enc_stat(r[f"__mx_{c}"])]
                 for c in cols
             }
-            for r in df.groupBy(*keys).agg(*aggs).collect()
-        }
+        return out
 
     @staticmethod
     def _next_version(prev: Commit | None) -> int:
@@ -2739,18 +2735,40 @@ def _version_of(rel_dir: str) -> str:
     return rel_dir.split("/", 1)[0]
 
 
+def _group_of(d: str) -> str:
+    """A dir's version dir, or an external dir's source root."""
+    if not _is_external(d):
+        return _version_of(d)
+    head, _, leaf = d.rpartition("/")
+    return head if "=" in leaf else d
+
+
+def _struct(schema_json: str) -> StructType:
+    return StructType.fromJson(json.loads(schema_json))
+
+
+def _written_schema(df: DataFrame, pcol: str | None = None) -> str:
+    """Schema JSON a read of ``df``'s parquet returns, known without one:
+    every field nullable, the hive partition column last."""
+    text = StructType(sorted(df.schema.fields,
+                             key=lambda f: f.name == pcol)).json()
+    for key in ("nullable", "containsNull", "valueContainsNull"):
+        text = text.replace(f'"{key}":false', f'"{key}":true')
+    return text
+
+
+def _footer_read(reader, paths: list[str]) -> DataFrame:
+    """The one read that infers its schema from parquet footers, a Spark
+    job: for dirs without a recorded schema — a bootstrap source, or a
+    dir of a manifest written before commits recorded schemas."""
+    return reader.parquet(*paths)
+
+
 def _is_external(d: str) -> bool:
     """Bootstrap data-map entries are ABSOLUTE source paths (Hudi
     METADATA_ONLY bootstrap analog — the table references but does not
     own them); everything the table wrote itself is root-relative."""
     return d.startswith("/")
-
-
-def _ext_base(d: str) -> str:
-    """Hive basePath for an external partition dir: its parent when the
-    leaf is a pcol=value segment, else the dir itself."""
-    head, _, leaf = d.rpartition("/")
-    return head if "=" in leaf else d
 
 
 def _pdir(pcol: str, value: Any) -> str:

@@ -176,7 +176,7 @@ def test_rli_reads_strict_dir_subset(spark, sf_smoke, rli_table):
     c = rli_table.latest_commit()
     rli = rli_table._rli()
     icommit = rli.latest_commit()
-    idx = rli._read_dirs(list(icommit.data.values()))
+    idx = rli._read_dirs(icommit.schemas_of(icommit.data.values()))
     hit_dirs = {
         r[0]
         for r in idx.join(one, "o_orderkey", "left_semi")

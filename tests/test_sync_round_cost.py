@@ -9,13 +9,13 @@ from aws_dms_to_hudi_spark.catalog import Catalog
 
 from tests.test_engine_e2e import land_batches, make_engine
 
-# Footer reads of the source batch and of the touched partitions, the
-# changelog write (its precombine exchange, then the write) and the
-# rewrite (its one exchange, then the write): 6, where the merge keyed
-# on the record key alone ran 10. The margin is the range exchange's
-# sampling job, which a rewrite wider than one task adds; one more
-# exchange, footer read or collect exceeds it.
-MAX_JOBS_PER_ROUND = 7
+# The footer read of the source batch, the changelog write (its
+# precombine exchange, then the write) and the rewrite (its one exchange,
+# then the write): 5. The touched partitions are read under the schema
+# their commit recorded, with no footer job. This rewrite fits one task,
+# so its range exchange runs no sampling job; one more exchange, footer
+# read or collect exceeds the bound.
+MAX_JOBS_PER_ROUND = 5
 
 
 def test_partitioned_cow_round_job_count(spark, sf_smoke, tmp_path):
